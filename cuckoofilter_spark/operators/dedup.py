@@ -50,6 +50,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -75,25 +77,15 @@ _P31 = np.uint64(_MERSENNE)
 # Tokenizer parity: the JVM side (``text.words_col`` → Java regex
 # ``\s+``) and the DuckDB oracle (RE2 ``\s``) both split on ASCII
 # whitespace ONLY — [ \t\n\x0B\f\r]. Python's ``str.split()`` also
-# splits on Unicode whitespace (NBSP \xa0,  , \x85, ...), so a
+# splits on Unicode whitespace (NBSP \xa0, \u2028, \x85, ...), so a
 # document whose n-grams straddle such a character would hash
 # differently here than in the filter built from JVM shingles — and a
 # probe gate (decontam) could then undercount hits and silently drop a
 # truly contaminated document, breaking the zero-false-negative
 # contract. Every Python-side tokenization in this package goes
-# through ``_words`` so all three tokenizers agree byte-for-byte.
-_ASCII_WS_RE = None  # compiled lazily (workers import this module)
-
-
-def _words(text: str) -> list[str]:
-    """ASCII-whitespace word split matching Java ``\\s+`` / RE2
-    ``\\s`` exactly (empty strings filtered)."""
-    global _ASCII_WS_RE
-    if _ASCII_WS_RE is None:
-        import re
-
-        _ASCII_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
-    return [w for w in _ASCII_WS_RE.split(text) if w]
+# through the kernel's Arrow word stage (``_word_hashes``:
+# ``pc.ascii_split_whitespace``, the same six bytes) so all three
+# tokenizers agree byte-for-byte.
 
 
 def _fold31(x: np.ndarray) -> np.ndarray:
@@ -134,18 +126,22 @@ def _perm_params(num_hashes: int, seed: int):
 # ---------------------------------------------------------------------
 # Vectorized shingle-hash kernel (round-6: replaces the per-shingle
 # hashlib.blake2b Python loop, which was ~3 us/shingle and 41% of the
-# whole sf10 bench). Pure numpy over the UTF-8 BYTE stream — no Python
+# whole sf10 bench). Arrow C++ tokenizes, numpy hashes; no Python
 # word-string objects are ever materialized:
 #
-#   1. the batch's documents are utf-8-encoded and joined with '\n';
-#   2. word spans = maximal runs of non-ASCII-whitespace BYTES. This
-#      is exactly the Java \s+ / RE2 \s word split (see _words): the
-#      six ASCII whitespace bytes never occur inside a UTF-8
-#      multi-byte sequence (continuation bytes are >= 0x80), so byte
-#      splitting == codepoint splitting;
-#   3. word hash = seeded 64-bit polynomial over the span's bytes,
-#      splitmix64-finalized (_span_hashes; byte gathers are length-
-#      bucketed so total work is O(total bytes));
+#   1. the batch is an Arrow string array (non-Arrow input is
+#      utf-8-encoded with surrogatepass first, _utf8_array);
+#   2. words = ``pc.ascii_split_whitespace`` (bytes 9-13 and 32, runs
+#      collapsed; the empty strings it emits at leading/trailing
+#      whitespace are dropped). This is exactly the Java \s+ / RE2 \s
+#      word split (tokenizer parity note above): the six ASCII
+#      whitespace bytes never occur inside a UTF-8 multi-byte sequence
+#      (continuation bytes are >= 0x80), so byte splitting ==
+#      codepoint splitting;
+#   3. word hash = seeded 64-bit polynomial over the word's bytes,
+#      splitmix64-finalized (_span_hashes), computed once per DISTINCT
+#      word of the batch (``dictionary_encode``) and gathered back to
+#      every token (_word_hashes);
 #   4. shingle hash = seeded polynomial over the k word hashes of a
 #      sliding window, splitmix64-finalized; windows never straddle a
 #      document boundary; per-doc distinct via np.unique.
@@ -216,8 +212,6 @@ def _kernel_key(seed: int):
         np.uint64(int.from_bytes(d[8:16], "little") | 1),
         d[16:24],
     )
-_WS_LUT = np.zeros(256, dtype=bool)
-_WS_LUT[[9, 10, 11, 12, 13, 32]] = True  # \t \n \x0b \f \r ' '
 # spans longer than this fall back to one hashlib call each (a 1 MB
 # unbroken token must not turn the length-bucketed loop into 10^6
 # tiny gathers); both kernel entry points share the constant, so the
@@ -232,40 +226,62 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x ^ (x >> np.uint64(31))
 
 
-def _utf8_concat(texts):
-    """(u8, doc_offsets): the batch's documents utf-8-encoded, joined
-    by '\n' (whitespace — words cannot span the seam), as a uint8
-    array plus each document's start offset (int64[n_docs])."""
-    bufs = [(t or "").encode("utf-8", "surrogatepass") for t in texts]
-    lens = np.fromiter(
-        (len(b) for b in bufs), dtype=np.int64, count=len(bufs)
-    )
-    offsets = np.cumsum(lens + 1) - (lens + 1)
-    u8 = np.frombuffer(b"\n".join(bufs) + b"\n", dtype=np.uint8)
-    return u8, offsets
+def _utf8_array(texts) -> pa.Array:
+    """The batch as an Arrow string array, nulls kept. Arrow input
+    passes through; anything else is utf-8-encoded with
+    ``surrogatepass`` (a lone surrogate hashes as its 3 encoded bytes)
+    and viewed as string without validation."""
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    if isinstance(texts, pa.Array):
+        return texts
+    return pa.array(
+        [None if t is None else t.encode("utf-8", "surrogatepass")
+         for t in texts],
+        pa.binary(),
+    ).view(pa.string())
 
 
-def _word_spans(u8: np.ndarray):
-    """(starts, lengths) of maximal non-whitespace byte runs."""
-    if u8.size == 0:
-        return (np.empty(0, dtype=np.int64),) * 2
-    nonws = ~_WS_LUT[u8]
-    d = np.diff(nonws.view(np.int8))
-    starts = np.flatnonzero(d == 1) + 1
-    ends = np.flatnonzero(d == -1) + 1
-    if nonws[0]:
-        starts = np.concatenate(([0], starts))
-    if nonws[-1]:
-        ends = np.concatenate((ends, [u8.size]))
-    return starts.astype(np.int64), (ends - starts).astype(np.int64)
+def _word_hashes(texts, seed: int):
+    """(counts, wh): each document's ASCII-whitespace word count
+    (int64[n_docs]; null and empty documents have 0) and the flat
+    word-hash array, documents in order and words in text order.
+    Hashes every distinct word of the batch once."""
+    arr = _utf8_array(texts)
+    split = pc.ascii_split_whitespace(arr)
+    per_doc = pc.list_value_length(split).fill_null(0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    enc = split.flatten().dictionary_encode()
+    words = enc.dictionary
+    off_t = np.int64 if pa.types.is_large_string(words.type) else np.int32
+    offs = np.frombuffer(
+        words.buffers()[1], dtype=off_t, count=len(words) + 1,
+        offset=words.offset * np.dtype(off_t).itemsize,
+    ).astype(np.int64)
+    data = words.buffers()[2]
+    u8 = (np.frombuffer(data, dtype=np.uint8) if data is not None
+          else np.empty(0, dtype=np.uint8))
+    lengths = np.diff(offs)
+    idx = enc.indices.to_numpy()
+    empty = np.flatnonzero(lengths == 0)
+    if len(empty):  # leading/trailing whitespace and empty documents
+        keep = idx != empty[0]
+        ck = np.concatenate(([0], np.cumsum(keep)))
+        ends = np.cumsum(per_doc)
+        per_doc = ck[ends] - ck[ends - per_doc]
+        idx = idx[keep]
+    return per_doc, _span_hashes(u8, offs[:-1], lengths, seed)[idx]
 
 
 def _span_hashes(u8, starts, lengths, seed: int) -> np.ndarray:
-    """Seeded hash of each byte span, vectorized: polynomial over the
-    bytes + splitmix64. Length-bucketed (descending sort) so the byte
-    gathers do O(total bytes) total work with no per-span masks.
-    Seeds >= 2**32 switch init/multiplier/salt to keyed mode
-    (``_kernel_key``)."""
+    """Seeded hash of each byte span ``u8[starts[i]:starts[i] +
+    lengths[i]]``, vectorized: polynomial over the bytes + splitmix64.
+    ``_word_hashes`` calls it once per batch on the distinct words of
+    an Arrow dictionary (``starts``/``lengths`` from its offsets).
+    Length-bucketed (descending sort) so the byte gathers do O(total
+    bytes) total work with no per-span masks; spans over ``_SPAN_CAP``
+    bytes hash with keyed blake2b instead. Seeds >= 2**32 switch
+    init/multiplier/salt to keyed mode (``_kernel_key``)."""
     n = len(starts)
     if n == 0:
         return np.empty(0, dtype=np.uint64)
@@ -354,24 +370,18 @@ def _gram_window_seq(texts, k: int, seed: int):
     (k−1), 0)), and the FLAT positional gram-hash sequence ``grams``
     (each doc's in-order window hashes, multiplicity kept;
     ``lengths[i]`` entries for doc i) — or ``grams=None`` when no doc
-    reaches k words. Factored out (round-7 review) so the de-duping
-    shingle kernel here and the positional kernel in
-    ``operators/spans`` share every stage by construction, keeping the
-    "a gram hashes identically everywhere" guarantee a code property
-    instead of a copy-paste discipline. Cross-document windows are
-    excluded by the per-doc ``lengths`` arithmetic (words are emitted
-    in byte order, so each doc's words are contiguous)."""
-    texts = list(texts)
-    n_docs = len(texts)
-    u8, doc_offs = _utf8_concat(texts)
-    w_starts, w_lens = _word_spans(u8)
-    doc_of = np.searchsorted(doc_offs, w_starts, side="right") - 1
-    counts = np.bincount(doc_of, minlength=n_docs)
+    reaches k words. ``texts`` is an Arrow string array (what an Arrow
+    UDF receives) or any sequence of str/None. Words and their hashes
+    come from the Arrow word stage (``_word_hashes``); dedup, spans
+    and both decontam sides all call this one prefix, so a gram hashes
+    identically everywhere by construction. Cross-document windows are
+    excluded by the per-doc ``lengths`` arithmetic (each doc's words
+    are contiguous in ``wh``)."""
+    counts, wh = _word_hashes(texts, seed)
     lengths = np.maximum(counts - (k - 1), 0)
     m = int(lengths.sum())
-    if len(w_starts) < k or m == 0:
+    if len(wh) < k or m == 0:
         return counts, lengths, None
-    wh = _span_hashes(u8, w_starts, w_lens, seed)
     acc = _window_gram_hashes(wh, k, _kernel_key(seed)[1])
     offs = np.cumsum(counts) - counts  # doc start offsets (word index)
     starts = np.cumsum(lengths) - lengths
@@ -412,12 +422,7 @@ def gram_string_hashes(grams, seed: int) -> np.ndarray:
     side shingles JVM-side (``shingles_col`` output strings) and the
     other shingles in Python (``decontam``). Handles mixed gram
     lengths."""
-    grams = list(grams)
-    u8, gram_offs = _utf8_concat(grams)
-    w_starts, w_lens = _word_spans(u8)
-    wh = _span_hashes(u8, w_starts, w_lens, seed)
-    gram_of = np.searchsorted(gram_offs, w_starts, side="right") - 1
-    counts = np.bincount(gram_of, minlength=len(grams))
+    counts, wh = _word_hashes(grams, seed)
     offs = np.cumsum(counts) - counts
     return _seq_hashes(wh, counts, offs, _kernel_key(seed)[1])
 

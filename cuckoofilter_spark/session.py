@@ -100,8 +100,9 @@ def scale_conf(
 
 def fan_out(df, target: int | None = None, *, factor: int = 2,
             min_bytes: int = 2 << 20):
-    """Round-robin repartition a NARROW source up to the session's
-    parallelism when its scan produced too few partitions.
+    """Hash-repartition (``xxhash64`` of the row's columns) a NARROW
+    source up to the session's parallelism when its scan produced too
+    few partitions.
 
     Why (round 8, guide §6/§2.5): single-row-group parquet files cap
     scan parallelism at ONE task no matter the split config — Spark

@@ -666,44 +666,40 @@ def run_streaming_decontam(
     documents into ``clean/batch=<id>`` or ``flagged/batch=<id>``
     (flagged rows carry ``n_overlap``) against a STATIC eval set.
 
-    The eval side is built ONCE before the stream starts — the filter
-    blob rides the closure into every batch (broadcast per job), and
-    the exact-verify n-gram table is parked under
-    ``<out_dir>/_eval/ngrams`` so each micro-batch reads it
-    executor-side (no driver-held row set, no cross-session DataFrame
-    reuse). Per-batch output overwrites its own ``batch=<id>`` dirs —
-    redelivery is idempotent, same as the other streaming jobs here.
-    State never grows: unlike streaming dedup there is NO cross-batch
-    mutable state, so this scales to any stream length as one narrow
-    probe pass + a candidates-only verify join per batch."""
+    The eval side is built ONCE before the stream starts. Within the
+    driver cap the stream holds one fused gate + verify UDF
+    (``ngram_overlap_udf`` over the driver's eval key array: one blob
+    and one key broadcast for the stream's lifetime — creating it per
+    batch would re-broadcast both every trigger). Above the cap the
+    exact-verify gram table is parked under ``<out_dir>/_eval/ngrams``
+    so each micro-batch's explode+join reads it executor-side (no
+    driver-held row set, no cross-session DataFrame reuse). Per-batch
+    output overwrites its own ``batch=<id>`` dirs — redelivery is
+    idempotent, same as the other streaming jobs here. State never
+    grows: unlike streaming dedup there is NO cross-batch mutable
+    state, so this scales to any stream length as one narrow probe
+    pass (+ a candidates-only verify join above the cap) per batch."""
     from cuckoofilter_spark.operators.decontam import (
-        _collect_gram_keys, eval_ngram_filter, ngram_overlap_udf,
-        overlap_report,
+        _eval_filter, ngram_overlap_udf, overlap_report,
     )
 
-    blob, ev_ngrams = eval_ngram_filter(
+    blob, keys, ev_ngrams = _eval_filter(
         eval_df, text_col, n=n, bits_per_item=bits_per_item, seed=seed
     )
-    # the parked verify table now holds gram HASHES (column gh) — see
-    # eval_ngram_filter round-8 note
     ev_dir = os.path.join(out_dir, "_eval", "ngrams")
-    ev_ngrams.write.mode("overwrite").parquet(ev_dir)
-    ev_ngrams.unpersist()
-    # one fused gate+verify UDF (one blob + one exact-set broadcast)
-    # for the stream's lifetime — creating it per batch would
-    # re-broadcast both every trigger. None when the eval set exceeds
-    # the driver cap: overlap_report then runs its explode+join
-    # fallback per batch against the parked parquet table.
-    keys = _collect_gram_keys(ev_ngrams)
-    hits = (
-        ngram_overlap_udf(eval_df.sparkSession, blob, keys, n=n, seed=seed)
-        if keys is not None else None
-    )
+    if keys is not None:
+        hits = ngram_overlap_udf(
+            eval_df.sparkSession, blob, keys, n=n, seed=seed
+        )
+    else:
+        hits = None
+        ev_ngrams.write.mode("overwrite").parquet(ev_dir)
+        ev_ngrams.unpersist()
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
-        ev = spark.read.parquet(ev_dir)
+        ev = spark.read.parquet(ev_dir) if hits is None else None
         flagged = overlap_report(
             batch_df, blob, ev, id_col, text_col,
             n=n, min_overlap=min_overlap, seed=seed, hits_udf=hits,

@@ -280,6 +280,73 @@ def test_decontaminate_gate_never_drops(spark, docs):
     assert lo == hi and len(lo) > 0
 
 
+def _decontam_frames(fn, forced_fallback: bool, monkeypatch):
+    """Run ``fn`` with the driver eval path, or with the driver cap
+    forced to 0 (the distributed eval build + explode/join verify)."""
+    import cuckoofilter_spark.operators.decontam as dc
+
+    with monkeypatch.context() as m:
+        if forced_fallback:
+            m.setattr(dc, "_DRIVER_EVAL_BUILD_MAX", 0)
+        df = fn()
+        return df.schema, df.sort(df.columns[0]).toPandas()
+
+
+@pytest.mark.parametrize("op", ["decontaminate", "novelty_report"])
+def test_decontam_gate_both_ways(spark, docs, op, monkeypatch):
+    """The driver-cap gate never changes an answer: the fused driver
+    path and the forced above-cap path return the same schema and
+    rows."""
+    from pandas.testing import assert_frame_equal
+
+    import cuckoofilter_spark.operators.decontam as dc
+
+    ev = docs.filter(F.col("doc_id") % 101 == 0)
+    corpus = docs.filter(F.col("doc_id") % 101 != 0)
+    fn = getattr(dc, op)
+    kw = {"min_overlap": 2} if op == "decontaminate" else {}
+
+    def run():
+        return fn(corpus, ev, "doc_id", "text", n=3, **kw)
+
+    schema, driver = _decontam_frames(run, False, monkeypatch)
+    schema_f, forced = _decontam_frames(run, True, monkeypatch)
+    assert schema == schema_f
+    assert len(driver) > 0
+    assert_frame_equal(driver, forced)
+
+
+def test_overlap_report_caller_gram_table(spark, docs, monkeypatch):
+    """overlap_report fed a gram table the caller built (distinct
+    shingle hashes from ``shingle_sets``, not ``eval_ngram_filter``'s
+    DataFrame) answers like ``decontaminate`` on both sides of the
+    driver cap."""
+    from pandas.testing import assert_frame_equal
+
+    from cuckoofilter_spark.operators.decontam import (
+        decontaminate, eval_ngram_filter, overlap_report,
+    )
+    from cuckoofilter_spark.operators.dedup import shingle_sets
+
+    ev = docs.filter(F.col("doc_id") % 101 == 0)
+    corpus = docs.filter(F.col("doc_id") % 101 != 0)
+    blob, _ = eval_ngram_filter(ev, "text", n=3)
+    grams = (
+        shingle_sets(ev, "doc_id", "text", shingle_k=3, seed=7)
+        .select(F.explode("sh").alias("gh")).distinct()
+    )
+    _, want = _decontam_frames(
+        lambda: decontaminate(corpus, ev, "doc_id", "text", n=3),
+        False, monkeypatch)
+    assert len(want) > 0
+    for forced in (False, True):
+        _, got = _decontam_frames(
+            lambda: overlap_report(corpus, blob, grams, "doc_id", "text",
+                                   n=3),
+            forced, monkeypatch)
+        assert_frame_equal(got, want)
+
+
 def test_count_hits_udf_segments(spark):
     """Array probe: per-row hit counts with empty/null arrays mixed in
     (the segment-sum offsets are the fiddly part)."""
