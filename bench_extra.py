@@ -65,15 +65,13 @@ def main() -> None:
 
     if "build_cuckoo" in phases:
         from cuckoofilter_spark.operators.build import (
-            build_sketch_shards, shard_key_expr, string_key_expr,
+            build_sketch_shards, routed_keys,
         )
         from cuckoofilter_spark.operators.merge import merge_shards_to_blob
 
-        # phase a: the JVM collapse (explode -> distinct -> repartition)
-        src = tokens.select(F.explode("tokens").alias("__v")).filter(
-            F.col("__v").isNotNull()
-        )
-        proj = src.distinct().repartition(CPUS, shard_key_expr("__v"))
+        # phase a: the build's normalize + collapse + route stages (Arrow
+        # pre-unique -> JVM distinct -> shard repartition), no kernel
+        proj, _ = routed_keys(tokens, "tokens", strategy="shuffle_distinct")
         timed("cuckoo.a_jvm_distinct", lambda: noop(proj))
         # phase b: full shard build (JVM collapse + python build)
         shards = build_sketch_shards(

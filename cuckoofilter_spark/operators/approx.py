@@ -105,65 +105,52 @@ def _sampled_duplication(df: DataFrame, column: str) -> float:
     return (row["n"] / row["d"]) if row["d"] else 1.0
 
 
-def _distinct_strategy(df: DataFrame, column: str, strategy: str) -> str:
-    """Resolve strategy='auto' for DISTINCT-INSENSITIVE sketches (HLL,
-    KMV: duplicate inserts cannot change the state). For a LARGE array
-    column (token streams: many occurrences per distinct key) the
-    'shuffle_distinct' plan lets Catalyst's map-side partial distinct
-    collapse the stream JVM-side, so Arrow ships ~cardinality keys
-    instead of every occurrence — at the 10^9-token scale step that is
-    the difference between a 23 GB and an 8 MB python-boundary
-    transfer. The cutover requires BOTH size (above
-    ``_AUTO_SHUFFLE_MIN_BYTES`` — below it the extra exchange's fixed
-    cost dominates) and a sampled duplication ratio >=
-    ``_AUTO_MIN_DUPLICATION`` (a large but near-unique key column
-    gains nothing from collapsing). Scalar columns keep the narrow
-    zero-shuffle build."""
+def _auto_strategy(df: DataFrame, column: str, strategy: str,
+                   collapsing: str, *, scalars: bool = False) -> str:
+    """Resolve strategy='auto' to ``collapsing`` (a JVM-collapsing build
+    strategy) or 'local'. For a LARGE, HIGH-DUPLICATION column the
+    collapse lets Catalyst's map-side partial aggregate shrink the
+    stream JVM-side, so Arrow ships ~cardinality rows instead of every
+    occurrence — at the 10^9-token scale step that is the difference
+    between a 23 GB and an 8 MB python-boundary transfer. The cutover
+    requires BOTH size (above ``_AUTO_SHUFFLE_MIN_BYTES`` — below it
+    the extra exchange's fixed cost dominates) and a sampled
+    duplication ratio >= ``_AUTO_MIN_DUPLICATION`` (a large but
+    near-unique column gains nothing from collapsing). Only array
+    columns qualify unless ``scalars``."""
     if strategy != "auto":
         return strategy
     from pyspark.sql.types import ArrayType
 
-    if not isinstance(df.schema[column].dataType, ArrayType):
+    if not scalars and not isinstance(df.schema[column].dataType, ArrayType):
         return "local"
     if _plan_size_bytes(df) < _AUTO_SHUFFLE_MIN_BYTES:
         return "local"
-    return ("shuffle_distinct"
+    return (collapsing
             if _sampled_duplication(df, column) >= _AUTO_MIN_DUPLICATION
             else "local")
+
+
+def _distinct_strategy(df: DataFrame, column: str, strategy: str) -> str:
+    """``_auto_strategy`` for DISTINCT-INSENSITIVE sketches (HLL, KMV:
+    duplicate inserts cannot change the state): 'shuffle_distinct'."""
+    return _auto_strategy(df, column, strategy, "shuffle_distinct")
 
 
 def _count_strategy(df: DataFrame, column: str, strategy: str) -> str:
-    """Resolve strategy='auto' for FREQUENCY sketches (CMS, MG) —
-    ``shuffle_count`` for large, high-duplication array columns (the
-    JVM partial COUNT collapses the stream to (key, count) pairs);
-    same size + duplication gates as ``_distinct_strategy``."""
-    if strategy != "auto":
-        return strategy
-    from pyspark.sql.types import ArrayType
-
-    if not isinstance(df.schema[column].dataType, ArrayType):
-        return "local"
-    if _plan_size_bytes(df) < _AUTO_SHUFFLE_MIN_BYTES:
-        return "local"
-    return ("shuffle_count"
-            if _sampled_duplication(df, column) >= _AUTO_MIN_DUPLICATION
-            else "local")
+    """``_auto_strategy`` for FREQUENCY sketches (CMS, MG):
+    'shuffle_count' collapses the stream to (key, count) pairs."""
+    return _auto_strategy(df, column, strategy, "shuffle_count")
 
 
 def _value_strategy(df: DataFrame, column: str, strategy: str) -> str:
-    """Resolve strategy='auto' for VALUE sketches (tdigest, KLL).
-    Discrete value columns (n_tok: thousands of distinct values over
-    billions of rows) collapse to exact (value, count) pairs JVM-side
-    — same size + duplication gates as ``_distinct_strategy``, but
-    scalar columns qualify too (quantile columns are usually
-    scalar)."""
-    if strategy != "auto":
-        return strategy
-    if _plan_size_bytes(df) < _AUTO_SHUFFLE_MIN_BYTES:
-        return "local"
-    return ("shuffle_value_count"
-            if _sampled_duplication(df, column) >= _AUTO_MIN_DUPLICATION
-            else "local")
+    """``_auto_strategy`` for VALUE sketches (tdigest, KLL):
+    'shuffle_value_count' collapses discrete value columns (n_tok:
+    thousands of distinct values over billions of rows) to exact
+    (value, count) pairs; scalar columns qualify too (quantile columns
+    are usually scalar)."""
+    return _auto_strategy(df, column, strategy, "shuffle_value_count",
+                          scalars=True)
 
 
 def hll_sketch(df: DataFrame, column: str, p: int = 14, seed: int = 2014,

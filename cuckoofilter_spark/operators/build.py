@@ -1,24 +1,38 @@
 """Distributed sketch build: the partial-aggregate half of a UDAF.
 
-One pass over the input, zero shuffles (unless the caller asks for a
-salted repartition to defuse skew): each input partition feeds one
-numpy sketch inside ``mapInArrow`` and emits exactly ONE row
-``(shard_id, kind, sketch, metrics, lineage)`` — the ``sketch_shards``
-shape of FIXTURES.md §3. ``tree_merge`` (operators/merge.py) is the
-final-aggregate half.
+``build_sketch_shards`` runs four stages in order and emits ONE row
+``(shard_id, kind, sketch, metrics, strategy, num_shards, lineage)``
+per partition — the ``sketch_shards`` shape of FIXTURES.md §3.
+``tree_merge`` (operators/merge.py) is the final-aggregate half.
+
+1. **Normalize** (JVM): the key column becomes ``__v``. String keys
+   (scalars or array elements) are pre-hashed with
+   ``string_key_expr``. When a JVM collapse follows, array columns
+   that it must see element by element are exploded and null keys
+   are dropped; otherwise the Arrow side flattens and drops nulls.
+2. **Collapse**: ``local`` none; ``shuffle_distinct`` a distinct
+   (array columns are first made unique per partition in Arrow, then
+   the JVM ``distinct`` runs); ``shuffle_count`` and
+   ``shuffle_value_count`` a JVM ``count`` per key.
+3. **Route**: a collapsed stream is repartitioned into ``n_parts``
+   shards on ``shard_key_expr``, so every shard holds a disjoint key
+   range. ``local`` keeps the input partitions and shuffles nothing.
+4. **Kernel** (``mapInArrow``): one numpy sketch per partition, fed
+   from one Arrow→numpy flatten (``_flatten``).
 
 Scale notes (the whole point):
 - token arrays are flattened **inside Arrow** (``ListArray.values`` is
-  zero-copy); no ``F.explode`` — exploding 10^12 sequences would
-  multiply the row count by ~300 before a shuffle that set-membership
-  build doesn't need.
-- per-partition ``np.unique`` gives local set semantics; cross-shard
-  duplicates collapse in the dedup tree-merge. Global shuffle-free.
+  zero-copy) unless a JVM count needs the elements as rows — exploding
+  10^12 sequences multiplies the row count by ~300.
 - the only Python<->JVM traffic is Arrow record batches in and P
   sketch rows out (P = number of partitions).
 - cuckoo shards must share the GLOBAL geometry (capacity sized for the
   merged total with headroom ≤0.85 load — a merged filter at >0.96
   load can overflow; reference guard at ``src/cuckoofilter.h:92-95``).
+
+Small inputs skip the shard build: ``bounded_collect`` brings them to
+the driver under one byte budget (``DRIVER_BUDGET_BYTES``) and
+``driver_sketch_blob`` builds the blob there.
 
 Reference parity anchors: bulk add loop = ``AddImpl``
 (``src/cuckoofilter.h:139-162``); this operator is the distributed
@@ -28,19 +42,18 @@ re-expression of ``benchmarks/bulk-insert-and-query.cc:154-170``'s
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, StringType
 
-from pyspark.sql.types import ArrayType, StringType
-
-from cuckoofilter_spark.core.registry import SKETCH_KINDS, wire_bytes
-
-_ARRAY_TYPES = ArrayType
+from cuckoofilter_spark.core.registry import (
+    SKETCH_KINDS, make_sketch, wire_bytes,
+)
 
 
 def string_key_expr(col: str | Column) -> Column:
@@ -51,6 +64,25 @@ def string_key_expr(col: str | Column) -> Column:
     column — build and probe agree on the 64-bit key space."""
     c = F.col(col) if isinstance(col, str) else col
     return F.xxhash64(c)
+
+
+def _string_keyed(dt: DataType) -> bool:
+    """A string column, or an array of strings."""
+    if isinstance(dt, ArrayType):
+        dt = dt.elementType
+    return isinstance(dt, StringType)
+
+
+def hash_string_keys(c: Column, dt: DataType) -> Column:
+    """The normalize stage's string step as an expression:
+    ``string_key_expr`` on a string column or on every element of a
+    string array; any other column passes through unchanged."""
+    if not _string_keyed(dt):
+        return c
+    if isinstance(dt, ArrayType):
+        return F.transform(c, string_key_expr)
+    return string_key_expr(c)
+
 
 SHARD_SCHEMA = (
     "shard_id int, kind string, sketch binary, "
@@ -70,6 +102,50 @@ METRICS_FIELDS = pa.struct(
     ]
 )
 
+# The one driver budget: every driver-side build (semi-join dims, the
+# duplicated-span gate, decontam eval sets, near-dup edge lists)
+# collects at most this many bytes, counting each collected column as
+# an 8-byte long — 4M keys or 2M (src, dst) edges. A bigger input
+# takes the distributed build. Tests set it to 0 to force that side.
+DRIVER_BUDGET_BYTES = 32 << 20
+
+
+def driver_budget_rows(df: DataFrame) -> int:
+    """How many rows of ``df`` fit ``DRIVER_BUDGET_BYTES``."""
+    return DRIVER_BUDGET_BYTES // (8 * len(df.columns))
+
+
+def bounded_collect(df: DataFrame, n_rows: int | None = None):
+    """``df`` as an Arrow table on the driver, or None when it has more
+    rows than ``driver_budget_rows`` allows.
+
+    A caller that already knows the row count passes ``n_rows`` and
+    gets a parallel collect (a global limit funnels every row through
+    one task: measured 0.78 s vs 0.17 s on a 700k-key dim). Without
+    it the collect is ``limit(cap + 1)``, which keeps a one-job plan
+    one job."""
+    cap = driver_budget_rows(df)
+    if n_rows is not None:
+        return df.toArrow() if n_rows <= cap else None
+    tbl = df.limit(cap + 1).toArrow()
+    return tbl if tbl.num_rows <= cap else None
+
+
+def collected_keys(tbl: pa.Table) -> np.ndarray:
+    """The first column of a ``bounded_collect`` table as uint64 sketch
+    keys, in collect order."""
+    return _flatten(tbl.column(0).chunks, np.int64).view(np.uint64)
+
+
+def driver_sketch_blob(kind: str, keys: np.ndarray, where: str,
+                       **params) -> bytes:
+    """The driver-side build: one ``kind`` sketch over ``keys`` (in
+    the given order — it fixes the blob bytes), refused inserts
+    raised, as a final blob."""
+    sk = make_sketch(kind, **params)
+    check_add_statuses(sk.add_many(keys), where)
+    return sk.to_bytes()
+
 
 def check_add_statuses(statuses, where: str) -> None:
     """Fail loudly when a membership filter refused inserts.
@@ -82,9 +158,7 @@ def check_add_statuses(statuses, where: str) -> None:
     that contract). Non-membership sketches return None — no-op."""
     if statuses is None:
         return
-    import numpy as _np
-
-    n_bad = int(_np.count_nonzero(statuses))
+    n_bad = int(np.count_nonzero(statuses))
     if n_bad:
         raise ValueError(
             f"{where}: {n_bad} key(s) refused with NotEnoughSpace — "
@@ -107,42 +181,6 @@ def metrics_dict(sk, blob: bytes, *, n_deleted: int = 0,
         "n_deleted": int(n_deleted),
         "n_not_found": int(n_not_found),
     }
-
-
-def _to_uint64(arr: pa.ChunkedArray | pa.Array) -> np.ndarray:
-    """Arrow column -> flat uint64 key array, flattening one list level.
-
-    Integers are reinterpreted (int64 -1 == uint64 2^64-1, matching how
-    the JVM side's xxhash64 output would be viewed); nulls dropped.
-    """
-    if isinstance(arr, pa.ChunkedArray):
-        chunks = arr.chunks
-    else:
-        chunks = [arr]
-    out = []
-    for c in chunks:
-        if pa.types.is_list(c.type) or pa.types.is_large_list(c.type):
-            c = c.flatten()
-        if c.null_count:
-            c = c.drop_null()
-        np_arr = c.to_numpy(zero_copy_only=False)
-        out.append(np_arr.astype(np.int64, copy=False).view(np.uint64))
-    if not out:
-        return np.empty(0, dtype=np.uint64)
-    return np.concatenate(out)
-
-
-def _to_float64(arr: pa.ChunkedArray) -> np.ndarray:
-    out = []
-    for c in arr.chunks if isinstance(arr, pa.ChunkedArray) else [arr]:
-        if pa.types.is_list(c.type) or pa.types.is_large_list(c.type):
-            c = c.flatten()
-        if c.null_count:
-            c = c.drop_null()
-        out.append(c.to_numpy(zero_copy_only=False).astype(np.float64, copy=False))
-    if not out:
-        return np.empty(0, dtype=np.float64)
-    return np.concatenate(out)
 
 
 def _fast_unique(a: np.ndarray) -> np.ndarray:
@@ -180,26 +218,6 @@ def _fast_unique_counts(a: np.ndarray):
     return np.unique(a, return_counts=True)
 
 
-def _partition_unique(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per-partition distinct of a list-typed key column, in Arrow:
-    flatten (zero-copy), drop nulls (explode+isNotNull parity), one
-    ``np.unique`` over the partition. Emits the keys with their input
-    element dtype so downstream hashing/partitioning sees exactly the
-    values the exploded form would have produced."""
-    parts: list[np.ndarray] = []
-    for b in batches:
-        col = b.column(0)
-        if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-            col = col.flatten()
-        if col.null_count:
-            col = col.drop_null()
-        if len(col):
-            parts.append(col.to_numpy(zero_copy_only=False))
-    if parts:
-        u = _fast_unique(np.concatenate(parts))
-        yield pa.RecordBatch.from_pydict({"__v": pa.array(u)})
-
-
 def shard_key_expr(col: str | Column) -> Column:
     """The expression shuffle_distinct shards partition on. Kept as a
     named single source of truth: ``delete_from_shards`` recomputes
@@ -234,6 +252,125 @@ def salted_repartition(
     )
 
 
+def _flatten(cols: Iterable[pa.Array], dtype=None) -> np.ndarray:
+    """The build's one Arrow→numpy step: Arrow arrays → one flat numpy
+    array, one list level flattened (zero-copy), nulls dropped, cast
+    to ``dtype`` when given. Integers cast to int64 then viewed as
+    uint64 are the sketch key space (int64 -1 == uint64 2^64-1, as the
+    JVM's xxhash64 output is viewed)."""
+    parts = []
+    for c in cols:
+        if pa.types.is_list(c.type) or pa.types.is_large_list(c.type):
+            c = c.flatten()
+        if c.null_count:
+            c = c.drop_null()
+        if len(c):
+            parts.append(c.to_numpy(zero_copy_only=False))
+    if not parts:
+        return np.empty(0, dtype=dtype or np.int64)
+    out = np.concatenate(parts)
+    return out if dtype is None else out.astype(dtype, copy=False)
+
+
+def _partition_unique(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Per-partition distinct of a list-typed key column, in Arrow: one
+    ``_fast_unique`` over the flattened, null-free partition. Emits
+    the keys with their input element dtype, so the shard hash and the
+    JVM distinct see exactly the values an explode would produce."""
+    keys = _flatten(b.column(0) for b in batches)
+    if len(keys):
+        yield pa.RecordBatch.from_pydict({"__v": pa.array(_fast_unique(keys))})
+
+
+# strategy -> (collapse, the sketch mode it needs, error otherwise).
+# A sketch's mode is "value" (tdigest, kll), "count" (weight_by_count)
+# or "set" (every other membership or distinct-count build).
+_STRATEGIES = {
+    "local": (None, None, None),
+    "shuffle_distinct": (
+        "distinct", "set", "shuffle_distinct is a membership-build strategy"),
+    "shuffle_count": (
+        "count", "count",
+        "shuffle_count requires a weight_by_count frequency sketch (cms)"),
+    "shuffle_value_count": (
+        "count", "value",
+        "shuffle_value_count requires a value-based sketch (tdigest, kll)"),
+}
+
+
+def _normalize(df: DataFrame, column: str, *, collapse: str | None,
+               lineage: bool) -> DataFrame:
+    """Stage 1: ``column`` as ``__v`` (plus ``__file`` for lineage),
+    string keys hashed. A JVM count sees array elements as exploded
+    rows, and every JVM collapse over scalar rows drops null keys
+    first — the Arrow kernel drops them itself, and a null group's
+    count would otherwise outlive its key."""
+    cols = [F.col(column).alias("__v")]
+    if lineage:
+        # hidden per-row file provenance from the file-source scan
+        cols.append(F.col("_metadata.file_path").alias("__file"))
+    src = df.select(*cols)
+    dt = df.schema[column].dataType
+    if collapse == "count" and isinstance(dt, ArrayType):
+        src = src.select(F.explode("__v").alias("__v"))
+        dt = dt.elementType
+    if _string_keyed(dt):
+        src = src.withColumn("__v", hash_string_keys(F.col("__v"), dt))
+    if collapse and not isinstance(dt, ArrayType):
+        src = src.filter(F.col("__v").isNotNull())
+    return src
+
+
+def _collapse(src: DataFrame, collapse: str | None) -> DataFrame:
+    """Stage 2: nothing, a distinct, or a per-key count ``__c``."""
+    if collapse == "distinct":
+        dt = src.schema["__v"].dataType
+        if isinstance(dt, ArrayType):
+            # Round 8: a per-partition unique in Arrow replaces the
+            # exploded JVM distinct, whose partial aggregate over every
+            # occurrence was ~85% of the collapse (4.7 s vs 0.8 s for
+            # the bare explode+scan at the sf1.0 step, 293M tokens).
+            # The JVM distinct STAYS after it: going straight into the
+            # builder ships P×per-partition-cardinality rows (29M at
+            # sf1.0) across the Arrow boundary, where the distinct's
+            # final aggregate leaves ~cardinality (1M) — interleaved
+            # A/B: 5.9 s vs 8.1 s. The boundary crossing, not the
+            # aggregate, is the expensive resource.
+            src = src.select(F.col("__v").alias("__a")).mapInArrow(
+                _partition_unique, f"__v {dt.elementType.simpleString()}"
+            )
+        return src.distinct()
+    if collapse == "count":
+        return src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
+    return src
+
+
+def routed_keys(
+    df: DataFrame, column: str, *, strategy: str = "local",
+    lineage: bool = False, shuffle_partitions: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Stages 1-3 of ``build_sketch_shards``: the DataFrame its kernel
+    reads (``__v``, then ``__c`` for counts or ``__file`` for
+    lineage) and the shard count (-1 for ``local``)."""
+    collapse = _STRATEGIES[strategy][0]
+    src = _collapse(
+        _normalize(df, column, collapse=collapse, lineage=lineage), collapse
+    )
+    if collapse is None:
+        return src, -1
+    n_parts = int(shuffle_partitions
+                  or df.sparkSession.sparkContext.defaultParallelism)
+    # Stage 3. The explicit user-numbered repartition on hash(__v)
+    # dodges two AQE traps: (a) AQE sizes partitions by BYTES and would
+    # coalesce the ~8B/key collapsed output into one partition,
+    # serializing the python build; (b) repartition(n, "__v") gets
+    # COLLAPSED into the aggregate's own ENSURE_REQUIREMENTS exchange
+    # (same clustering), which AQE may coalesce — hash(__v) stays a
+    # distinct, non-coalescible expression. Shard ownership stays
+    # computable (shard_key_expr).
+    return src.repartition(n_parts, shard_key_expr("__v")), n_parts
+
+
 def build_sketch_shards(
     df: DataFrame,
     column: str,
@@ -248,260 +385,95 @@ def build_sketch_shards(
 ) -> DataFrame:
     """Per-partition sketch build -> one shard row per partition.
 
-    ``column`` may be a scalar numeric column or an ``array<int>``
-    column (flattened zero-copy in Arrow). For ``kind='cuckoo'`` pass
-    ``max_num_keys`` (GLOBAL capacity) and optionally ``bits_per_item``
-    / ``seed``; other kinds take their own constructor params.
+    ``column`` may be a scalar column or an ``array`` column (flattened
+    zero-copy in Arrow); string keys are hashed with
+    ``string_key_expr``. For ``kind='cuckoo'`` pass ``max_num_keys``
+    (GLOBAL capacity) and optionally ``bits_per_item`` / ``seed``;
+    other kinds take their own constructor params.
 
     ``distinct=True`` inserts each locally-distinct key once (set
     semantics — required for membership filters over repetitive
-    streams). For frequency sketches (cms) set
+    streams). For frequency sketches (cms, mg) set
     ``weight_by_count=True`` to add local counts instead, which is
     exact and cheaper than feeding duplicates one by one.
 
-    ``strategy`` picks the distributed plan for membership builds:
+    ``strategy`` picks the plan (module docstring, stages 2-3):
 
-    - ``'local'`` (default): zero-shuffle — per input partition,
-      locally-distinct keys feed one filter; the dedup tree-merge
-      collapses cross-shard duplicates. Optimal when the key space is
-      SPARSE relative to a shard (each shard sees few repeats of the
-      global key set): merge work = Σ per-shard distinct ≈ global
-      distinct.
-    - ``'shuffle_distinct'``: ``explode → distinct`` first — Catalyst
-      runs a map-side partial aggregate, so the shuffle carries at
-      most (input partitions × key cardinality) rows, then each
-      reducer builds a filter over a DISJOINT key range. Optimal when
-      the key space SATURATES each shard (hot vocab: every partition
-      sees most keys) — merge work collapses from P×cardinality to
-      exactly cardinality. For a 2^20-token vocab at 10^12 sequences
-      this is the difference between 10^11 and 10^6 merge inserts.
+    - ``'local'`` (default): zero shuffles — per input partition, one
+      sketch over the locally-distinct keys; the dedup tree-merge
+      collapses cross-shard duplicates. Best when the key space is
+      SPARSE relative to a shard: merge work = Σ per-shard distinct ≈
+      global distinct. ``lineage=True`` records the input files.
+    - ``'shuffle_distinct'`` (set-mode sketches): a JVM distinct with
+      a map-side partial aggregate, then each of ``shuffle_partitions``
+      shards builds over a DISJOINT key range. Best when the key space
+      SATURATES each shard (hot vocab): merge work collapses from
+      P×cardinality to cardinality — for a 2^20-token vocab at 10^12
+      sequences, 10^11 vs 10^6 merge inserts.
+    - ``'shuffle_count'`` (``weight_by_count`` frequency sketches): the
+      same shape with a JVM partial COUNT, so Arrow carries exact
+      (key, count) pairs at ~cardinality rows instead of every
+      occurrence; the sketch gets one weighted insert per key.
+    - ``'shuffle_value_count'`` (tdigest, kll): the count collapse over
+      a discrete value column; the digest gets ``add_weighted`` per
+      distinct value (t-digest state is identical to the
+      per-occurrence build on low-cardinality domains; KLL uses binary
+      weight decomposition, same rank guarantee).
+
+    Shuffled strategies record their shard count in ``num_shards``
+    (``delete_from_shards`` routes by it) and carry no lineage.
     """
     cls = SKETCH_KINDS[kind]
     value_based = kind in ("tdigest", "kll")
-    if strategy not in ("local", "shuffle_distinct", "shuffle_count",
-                        "shuffle_value_count"):
+    if strategy not in _STRATEGIES:
         raise ValueError(f"unknown build strategy {strategy!r}")
-    if strategy == "shuffle_value_count":
-        # Value-sketch analog of shuffle_count: Catalyst's map-side
-        # partial COUNT collapses a DISCRETE value column (n_tok:
-        # thousands of distinct values across billions of rows)
-        # JVM-side, so the python boundary carries (value, count)
-        # pairs at ~cardinality rows and the digest does one
-        # add_weighted insert per distinct value. For t-digest the
-        # tie-collapsing compress makes this state-identical to the
-        # per-occurrence build on low-cardinality domains; KLL uses
-        # binary weight decomposition (same rank guarantee).
-        if not value_based:
-            raise ValueError(
-                "shuffle_value_count requires a value-based sketch "
-                "(tdigest, kll)"
-            )
-        lineage = False
-        src = df.select(F.col(column).alias("__v"))
-        if isinstance(src.schema["__v"].dataType, _ARRAY_TYPES):
-            src = src.select(F.explode("__v").alias("__v"))
-        # null parity with _to_float64's null-dropping
-        src = src.filter(F.col("__v").isNotNull())
-        n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-            .defaultParallelism
-        projected = (
-            src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-            .repartition(n_parts, shard_key_expr("__v"))
-        )
-    elif strategy == "shuffle_count":
-        # Frequency-sketch analog of shuffle_distinct: Catalyst's
-        # map-side partial COUNT collapses the token stream JVM-side,
-        # so the python boundary carries (key, count) pairs at
-        # ~cardinality rows instead of every occurrence — same 23 GB →
-        # 16 MB transfer collapse, with the exact per-key totals a
-        # weighted CMS insert needs.
-        if value_based or not weight_by_count:
-            raise ValueError(
-                "shuffle_count requires a weight_by_count frequency "
-                "sketch (cms)"
-            )
-        lineage = False
-        src = df.select(F.col(column).alias("__v"))
-        if isinstance(src.schema["__v"].dataType, _ARRAY_TYPES):
-            src = src.select(F.explode("__v").alias("__v"))
-        if isinstance(src.schema["__v"].dataType, StringType):
-            src = src.select(string_key_expr("__v").alias("__v"))
-        # drop null keys JVM-side to match the local path's semantics
-        # (_to_uint64 drops nulls): a null array element or null scalar
-        # would otherwise become a groupBy row whose key _to_uint64
-        # removes while its count survives — misaligned add_many arrays
-        src = src.filter(F.col("__v").isNotNull())
-        n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-            .defaultParallelism
-        # groupBy carries its own ENSURE_REQUIREMENTS exchange; the
-        # explicit user-numbered repartition on a DIFFERENT expression
-        # (shard hash) dodges the same two AQE traps as
-        # shuffle_distinct below
-        projected = (
-            src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-            .repartition(n_parts, shard_key_expr("__v"))
-        )
-    elif strategy == "shuffle_distinct":
-        if value_based or weight_by_count:
-            raise ValueError(
-                "shuffle_distinct is a membership-build strategy"
-            )
-        lineage = False  # provenance dissolves across the distinct shuffle
-        dt = df.schema[column].dataType
-        if isinstance(dt, _ARRAY_TYPES):
-            # Round 8: per-partition np.unique in Arrow replaces the
-            # exploded JVM distinct. The distinct's partial
-            # hash-aggregate over every exploded occurrence was ~85%
-            # of the collapse (measured 4.7 s for explode→distinct vs
-            # 0.8 s for the bare explode+scan at the sf1.0 step, 293M
-            # tokens). Values and ELEMENT TYPE are preserved (int
-            # arrays stay int), so the distinct set per shard, the
-            # shard-routing hash and the final filter semantics are
-            # identical to the exploded form.
-            elem = dt.elementType
-            key_col = F.col(column)
-            if isinstance(elem, StringType):
-                # hash BEFORE distinct: the shuffle then moves 8-byte
-                # hashes, never the strings themselves
-                key_col = F.transform(key_col, string_key_expr)
-                elem_sql = "bigint"
-            else:
-                elem_sql = elem.simpleString()
-            src = df.select(key_col.alias("__a")).mapInArrow(
-                _partition_unique, f"__v {elem_sql}"
-            )
-            # The JVM distinct STAYS after the pre-unique (measured,
-            # round 8): dropping it in favor of one exchange straight
-            # into the builder ships P×per-partition-cardinality rows
-            # (29M at sf1.0) across the Arrow boundary into the build
-            # stage, where the distinct's final aggregate collapses
-            # them to ~cardinality rows (1M) first — interleaved A/B:
-            # two-exchange plan 5.9 s vs single-exchange 8.1 s. The
-            # boundary crossing, not the aggregate, is the expensive
-            # resource. Then the explicit user-numbered repartition of
-            # the survivors dodges two AQE traps: (a) AQE sizes
-            # partitions by BYTES and would coalesce the ~8B/key
-            # distinct output into one partition, serializing the
-            # python build; (b) repartition(n, "__v") gets COLLAPSED
-            # into the distinct's own ENSURE_REQUIREMENTS exchange
-            # (same clustering), which AQE may coalesce — hash(__v)
-            # stays a distinct, non-coalescible expression. Shard
-            # ownership stays computable (shard_key_expr).
-            n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-                .defaultParallelism
-            projected = src.distinct().repartition(
-                n_parts, shard_key_expr("__v")
-            )
-            # downstream: keys are already globally distinct & disjoint
-            distinct = False
-        else:
-            src = df.select(F.col(column).alias("__v"))
-            if isinstance(src.schema["__v"].dataType, StringType):
-                src = src.select(string_key_expr("__v").alias("__v"))
-            # null-key parity with the local path (see shuffle_count
-            # above)
-            src = src.filter(F.col("__v").isNotNull())
-            # SCALAR columns keep the JVM distinct-first plan (no
-            # Arrow pre-unique exists to shrink the stream, so the
-            # map-side partial aggregate is what collapses the big
-            # shuffle to ≈cardinality rows per partition), then an
-            # explicit user-numbered repartition of the survivors.
-            # Two traps this dodges: (a) AQE sizes partitions by
-            # BYTES and would coalesce the ~8B/key distinct output
-            # into one partition, serializing the CPU-heavy python
-            # build stage; (b) repartition(n, "__v") gets COLLAPSED
-            # into the distinct's own ENSURE_REQUIREMENTS exchange
-            # (same clustering), which AQE may coalesce — so we
-            # partition on hash(__v), a distinct expression Catalyst
-            # keeps as a user-numbered, non-coalescible shuffle.
-            # Shard ownership stays computable (shard_key_expr).
-            n_parts = shuffle_partitions or df.sparkSession.sparkContext \
-                .defaultParallelism
-            projected = src.distinct().repartition(
-                n_parts, shard_key_expr("__v")
-            )
-            # downstream: keys are already globally distinct & disjoint
-            distinct = False
-    else:
-        if lineage:
-            try:
-                lineage = bool(df.inputFiles())
-            except Exception:
-                lineage = False
-        dt = df.schema[column].dataType
-        key_col = F.col(column)
-        if isinstance(dt, StringType):
-            key_col = string_key_expr(key_col)
-        elif isinstance(dt, _ARRAY_TYPES) and isinstance(
-            dt.elementType, StringType
-        ):
-            key_col = F.transform(key_col, string_key_expr)
-        sel = [key_col.alias("__v")]
-        if lineage:
-            # hidden per-row file provenance from the file-source scan
-            sel.append(F.col("_metadata.file_path").alias("__file"))
-        projected = df.select(*sel)
-
-    # shard rows record their build strategy so downstream operators
-    # (delete_from_shards) can validate routing assumptions; num_shards
-    # is the shuffle partition count for shuffle_distinct (-1 = n/a)
-    n_shards_meta = -1
-    if strategy in ("shuffle_distinct", "shuffle_count",
-                    "shuffle_value_count"):
-        n_shards_meta = int(
-            shuffle_partitions
-            or df.sparkSession.sparkContext.defaultParallelism
-        )
+    collapse, needs, error = _STRATEGIES[strategy]
+    mode = "value" if value_based else "count" if weight_by_count else "set"
+    if needs not in (None, mode):
+        raise ValueError(error)
+    if collapse is not None:
+        lineage = False  # provenance dissolves across the shuffle
+    elif lineage:
+        try:
+            lineage = bool(df.inputFiles())
+        except Exception:
+            lineage = False
+    projected, n_shards = routed_keys(
+        df, column, strategy=strategy, lineage=lineage,
+        shuffle_partitions=shuffle_partitions,
+    )
+    counted = collapse == "count"
+    unique = distinct and collapse is None  # shuffled keys are distinct
+    key_dtype = np.float64 if value_based else np.int64
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sk = cls(**params)
         files: set = set()
-        pieces: list[np.ndarray] = []
-        cnt_pieces: list[np.ndarray] = []
+        keys: list[np.ndarray] = []
+        counts: list[np.ndarray] = []
         for b in batches:
-            col = b.column(0)
-            if lineage and b.num_columns > 1:
+            if lineage:
                 files.update(b.column(1).unique().to_pylist())
-            if value_based:
-                vals = _to_float64(col)
-                if len(vals):
-                    if strategy == "shuffle_value_count":
-                        # (value, count) pairs — no nulls survive the
-                        # JVM-side filter, so columns stay aligned
-                        sk.add_weighted(
-                            vals,
-                            b.column(1).to_numpy(zero_copy_only=False)
-                            .astype(np.int64),
-                        )
-                    else:
-                        sk.add_many(vals)  # digests self-compress
+            k = _flatten([b.column(0)], key_dtype)
+            c = _flatten([b.column(1)], np.int64) if counted else None
+            if not len(k):
+                continue
+            if value_based:  # digests self-compress: insert per batch
+                sk.add_weighted(k, c) if counted else sk.add_many(k)
             else:
-                keys = _to_uint64(col)
-                if len(keys):
-                    pieces.append(keys)
-                    if strategy == "shuffle_count":
-                        # pre-aggregated (key, count) pairs from the
-                        # JVM groupBy — keys are globally disjoint per
-                        # reducer, no local re-unique needed
-                        cnt_pieces.append(
-                            b.column(1).to_numpy(zero_copy_only=False)
-                            .astype(np.int64)
-                        )
-        n_in = 0
-        if not value_based and pieces:
-            keys = np.concatenate(pieces)
-            n_in = len(keys)
-            if strategy == "shuffle_count":
-                sk.add_many(keys, np.concatenate(cnt_pieces))
+                keys.append(k.view(np.uint64))
+                counts.append(c)
+        if keys:
+            k = np.concatenate(keys)
+            if counted:
+                args = (k, np.concatenate(counts))
             elif weight_by_count:
-                uniq, counts = _fast_unique_counts(keys)
-                sk.add_many(uniq, counts)
+                args = _fast_unique_counts(k)
             else:
-                if distinct:
-                    keys = _fast_unique(keys)
-                check_add_statuses(
-                    sk.add_many(keys), f"build_sketch_shards[{kind}]"
-                )
+                args = (_fast_unique(k) if unique else k,)
+            check_add_statuses(
+                sk.add_many(*args), f"build_sketch_shards[{kind}]"
+            )
         tc = TaskContext.get()
         shard_id = tc.partitionId() if tc is not None else 0
         blob = wire_bytes(sk)  # transport format; final blob packs
@@ -512,7 +484,7 @@ def build_sketch_shards(
                 "sketch": pa.array([blob], pa.binary()),
                 "metrics": pa.array([metrics_dict(sk, blob)], METRICS_FIELDS),
                 "strategy": pa.array([strategy]),
-                "num_shards": pa.array([n_shards_meta], pa.int32()),
+                "num_shards": pa.array([n_shards], pa.int32()),
                 "lineage": pa.array([sorted(files)], pa.list_(pa.string())),
             }
         )

@@ -21,7 +21,7 @@ sketch removes it:
 3. only the PROBE HITS — true overlaps plus an FPR-controlled
    trickle (bits_per_item=16 ⇒ ~0.01% per n-gram) — pay the exact
    verification, so the result is exact up to 64-bit gram-hash
-   collisions. For eval sets within the driver cap the exact check
+   collisions. For eval sets within the driver budget the exact check
    rides INSIDE the same UDF pass (``ngram_overlap_udf``: a
    ``searchsorted`` of the hit grams against the broadcast sorted
    eval gram-hash array — no join at all); larger eval sets explode
@@ -33,7 +33,7 @@ Driver side, ``decontaminate`` runs one small eval job: it collects
 the eval set's distinct gram hashes, builds the filter from them and
 hands the same array to ``ngram_overlap_udf`` — the keys never go
 back into the JVM. A gram DataFrame exists only where one is read:
-the public ``eval_ngram_filter``, the above-cap fallback, and the
+the public ``eval_ngram_filter``, the above-budget fallback, and the
 streaming job's parked verify table.
 
 This is the same probe-then-verify shape as the semi-join operator
@@ -57,7 +57,9 @@ from pyspark.sql.types import (
 )
 
 from cuckoofilter_spark.core.cuckoo import suggest_capacity as _suggest_capacity
-from cuckoofilter_spark.operators.build import build_sketch_shards
+from cuckoofilter_spark.operators.build import (
+    bounded_collect, build_sketch_shards, collected_keys, driver_sketch_blob,
+)
 from cuckoofilter_spark.operators.merge import merge_shards_to_blob
 
 
@@ -160,7 +162,7 @@ def ngram_stats_udf(spark, blob: bytes, *, n: int, seed: int):
 
 def ngram_hit_stats_udf(spark, blob: bytes, *, n: int, seed: int):
     """Column-function ``f(text) -> struct<n_total int, n_hits int,
-    hits array<long>>`` — the gate of the above-cap verify join: one
+    hits array<long>>`` — the gate of the above-budget verify join: one
     tokenize → shingle → hash → batch-probe pass that also RETURNS the
     distinct gram hashes the broadcast filter contained, so the exact
     verify join explodes 8-byte candidate hashes instead of
@@ -242,18 +244,6 @@ def ngram_overlap_udf(spark, blob: bytes, exact_keys, *, n: int, seed: int):
     return apply
 
 
-def _collect_gram_keys(ev_ngrams: DataFrame):
-    """The gram-hash set of a caller's gram DataFrame (column ``gh``)
-    as a uint64 ndarray, or None when it exceeds the driver cap
-    (limit-bounded collect — the fused verify then falls back to the
-    explode+join plan)."""
-    tbl = ev_ngrams.select("gh").limit(_DRIVER_EVAL_BUILD_MAX + 1).toArrow()
-    if tbl.num_rows > _DRIVER_EVAL_BUILD_MAX:
-        return None
-    return tbl.column("gh").to_numpy().astype(np.int64, copy=False).view(
-        np.uint64)
-
-
 def _novelty_cols(id_col: str) -> list:
     """The output columns of ``novelty_report`` from ``n_total`` and
     ``__n_seen``; both plans share them, so both give one schema (the
@@ -284,17 +274,17 @@ def novelty_report(
     fully novel). Data curation uses this to down-weight or drop
     low-novelty documents against an existing training snapshot.
 
-    Plan shape: within the driver cap, one narrow Arrow pass computes
-    (n_total, n_seen) per document — the CF gate (zero false
+    Plan shape: within the driver budget, one narrow Arrow pass
+    computes (n_total, n_seen) per document — the CF gate (zero false
     negatives) then a ``searchsorted`` verify against the broadcast
-    reference gram set; no shuffle, no explode, no join. Above the cap
-    the gate pass also returns the hit hashes, and only documents with
+    reference gram set; no shuffle, no explode, no join. Above it the
+    gate pass also returns the hit hashes, and only documents with
     ≥1 hit — the overlapping sliver plus the FPR trickle — pay the
     explode + broadcast-join verification (a document with 0 filter
     hits has exactly 0 true overlaps). Documents with an empty n-gram
     set (< n words) report n_total=0, novelty_milli=1000.
 
-    Caching lifetime (above-cap path only): the gate output and the
+    Caching lifetime (above-budget path only): the gate output and the
     reference gram table stay persisted for the session — deliberate
     when scoring several corpus slices against one reference, but a
     loop over MANY references should call
@@ -342,19 +332,11 @@ def novelty_report(
     )
 
 
-# eval n-gram sets at or below this distinct count build the filter
-# DRIVER-SIDE from one collect (8 bytes/gram: 4M grams = 32 MB on the
-# driver) instead of paying a 32-task shard build + merge round for a
-# KB-scale filter — the eval side of decontamination is small by
-# contract. Larger sets keep the distributed shard build.
-_DRIVER_EVAL_BUILD_MAX = 1 << 22
-
-
 def _eval_filter(
     eval_df: DataFrame, text_col: str, *, n: int, bits_per_item: int,
     seed: int, capacity: int | None = None,
 ):
-    """(blob, keys, grams) for an eval set. Within the driver cap:
+    """(blob, keys, grams) for an eval set. Within the driver budget:
     ``keys`` is the distinct gram-hash set as a uint64 ndarray (the
     filter's insertion order) and ``grams`` is None. Above it: ``keys``
     is None and ``grams`` is the persisted distributed gram DataFrame
@@ -363,9 +345,10 @@ def _eval_filter(
 
     # ONE job for the whole small-eval path: each partition emits its
     # locally-distinct gram hashes, the driver takes the global
-    # unique. The limit bounds what the driver can ever receive — if
-    # it fires (sum of per-partition uniques past the cap), we take
-    # the distributed path below instead.
+    # unique. The eval side is small by contract, so this skips a
+    # shard build + merge round for a KB-scale filter. If the sum of
+    # per-partition uniques passes the driver budget, we take the
+    # distributed path below instead.
     def part_grams(batches):
         seen: list[np.ndarray] = []
         for batch in batches:
@@ -376,22 +359,19 @@ def _eval_filter(
             gh = np.unique(np.concatenate(seen)).view(np.int64)
             yield pa.RecordBatch.from_arrays([pa.array(gh)], names=["gh"])
 
-    tbl = (
+    tbl = bounded_collect(
         fan_out(eval_df.select(F.col(text_col)))
         .mapInArrow(part_grams, "gh long")
-        .limit(_DRIVER_EVAL_BUILD_MAX + 1)
-        .toArrow()
     )
-    if tbl.num_rows <= _DRIVER_EVAL_BUILD_MAX:
-        from cuckoofilter_spark.core.cuckoo import CuckooFilter
-        from cuckoofilter_spark.operators.build import check_add_statuses
-
+    if tbl is not None:
         # unique in int64 order: the insertion order fixes the blob bytes
-        keys = np.unique(tbl.column("gh").to_numpy()).view(np.uint64)
+        keys = np.unique(collected_keys(tbl).view(np.int64)).view(np.uint64)
         cap = max(_suggest_capacity(int(capacity or len(keys))), 1024)
-        f = CuckooFilter(cap, bits_per_item, seed=seed)
-        check_add_statuses(f.add_many(keys), "eval_ngram_filter")
-        return f.to_bytes(), keys, None
+        blob = driver_sketch_blob(
+            "cuckoo", keys, "eval_ngram_filter", max_num_keys=cap,
+            bits_per_item=bits_per_item, seed=seed,
+        )
+        return blob, keys, None
 
     # big eval set: distributed distinct + shard build
     @F.arrow_udf(ArrayType(LongType()))
@@ -428,10 +408,10 @@ def eval_ngram_filter(
 
     The gram table is HASHED with the same shingle kernel as the probe
     side (agreement by construction), because the exact verify
-    compares 8-byte kernel hashes, not strings. Small eval sets (≤
-    ``_DRIVER_EVAL_BUILD_MAX`` distinct grams) build the filter
-    driver-side from one collect; the returned DataFrame is then made
-    from the driver's key array. Larger sets keep the shard build +
+    compares 8-byte kernel hashes, not strings. Eval sets within the
+    driver budget (``build.DRIVER_BUDGET_BYTES``: 4M distinct grams)
+    build the filter driver-side from one collect; the returned
+    DataFrame is then made from the driver's key array. Larger sets keep the shard build +
     merge. ``capacity`` pre-sizes the filter and skips nothing else
     (the distinct count is needed to pick the build path).
     ``decontaminate`` and ``novelty_report`` do not call this: they
@@ -457,8 +437,8 @@ def decontaminate(
 
     Plan shape (the part that matters at 100 TB): one small eval job,
     then the corpus is touched by one narrow Arrow pass — no shuffle.
-    Within the driver cap that pass also verifies (``ngram_overlap_udf``
-    with the driver's eval key array). Above it, only CANDIDATE
+    Within the driver budget that pass also verifies
+    (``ngram_overlap_udf`` with the driver's eval key array). Above it, only CANDIDATE
     documents pay an explode+join. Monotonicity makes the gate safe:
     per-document filter hits ≥ true overlaps (zero false negatives), so
     ``hits ≥ min_overlap`` can never drop a document the exact join
@@ -495,7 +475,7 @@ def overlap_report(
     batch. ``ev_ngrams`` is the HASHED gram table from
     ``eval_ngram_filter`` (column ``gh``).
 
-    Plan shape: within the driver cap (a bounded collect of
+    Plan shape: within the driver budget (a bounded collect of
     ``ev_ngrams``) ONE fused Arrow pass over the corpus computes each
     document's overlap count, exact up to 64-bit gram-hash collisions
     (``ngram_overlap_udf``). Above it,
@@ -513,9 +493,11 @@ def overlap_report(
     from cuckoofilter_spark.session import fan_out
 
     if hits_udf is None:
-        keys = _collect_gram_keys(ev_ngrams)
-        if keys is not None:
-            hits_udf = ngram_overlap_udf(spark, blob, keys, n=n, seed=seed)
+        tbl = bounded_collect(ev_ngrams.select("gh"))
+        if tbl is not None:
+            hits_udf = ngram_overlap_udf(
+                spark, blob, collected_keys(tbl), n=n, seed=seed
+            )
     narrow = fan_out(corpus.select(F.col(id_col), F.col(text_col)))
     if hits_udf is not None:
         # fused plan: ONE corpus pass computes the exact overlap count
@@ -533,7 +515,7 @@ def overlap_report(
             )
         )
 
-    # eval set past the driver cap: probe-gate + explode + broadcast
+    # eval set past the driver budget: probe-gate + explode + broadcast
     # join verify
     stats = ngram_hit_stats_udf(spark, blob, n=n, seed=seed)
     if broadcast_eval:

@@ -1136,24 +1136,15 @@ def star_contraction_components(
     return out
 
 
-# pair sets at or below this edge count resolve driver-side with a
-# numpy union-find (two longs/edge: 2M edges = 32 MB collected) —
-# label-propagation pays 3-4 Spark jobs PER ROUND and near-dup
-# clusters at bench scale resolve in milliseconds locally (round 8:
-# the propagation rounds were most of the semantic_dedup row). Bigger
-# edge sets keep the distributed path unchanged.
-_DRIVER_COMPONENTS_MAX = 2_000_000
-
-
-def _components_driver(edges: DataFrame) -> DataFrame:
-    """(doc, rep) via driver-side union-find over a SMALL edge list.
-    Output contract identical to the distributed resolvers: every
-    node of the edge set labeled with its component MINIMUM."""
+def _components_driver(spark, edges: pa.Table, id_type) -> DataFrame:
+    """(doc, rep) via driver-side union-find over a SMALL collected
+    edge list. Output contract identical to the distributed resolvers:
+    every node of the edge set labeled with its component MINIMUM,
+    both columns of the input id type."""
     import pyspark.sql.types as T
 
-    pdf = edges.toPandas()
-    u = pdf["src"].to_numpy(dtype=np.int64)
-    v = pdf["dst"].to_numpy(dtype=np.int64)
+    u = edges.column("src").to_numpy().astype(np.int64, copy=False)
+    v = edges.column("dst").to_numpy().astype(np.int64, copy=False)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     parent = np.arange(len(nodes), dtype=np.int64)
 
@@ -1175,11 +1166,10 @@ def _components_driver(edges: DataFrame) -> DataFrame:
     roots = np.array([find(i) for i in range(len(nodes))], dtype=np.int64)
     # nodes[] ascending ⇒ root index is the component's min node index
     reps = nodes[roots]
-    spark = edges.sparkSession
     out = pd.DataFrame({"doc": nodes, "rep": reps})
     schema = T.StructType([
-        T.StructField("doc", T.LongType()),
-        T.StructField("rep", T.LongType()),
+        T.StructField("doc", id_type),
+        T.StructField("rep", id_type),
     ])
     return spark.createDataFrame(out, schema)
 
@@ -1210,21 +1200,23 @@ def duplicate_clusters(
         .distinct()
         .persist()
     )
-    # round 8: SMALL integral-key edge sets resolve driver-side (one
-    # collect + union-find) instead of paying 3-4 jobs per propagation
-    # round; the distributed paths below are unchanged for every other
-    # case. The count also materializes the persist the loop needs.
+    # round 8: integral-key edge sets within the driver budget (2M
+    # edges) resolve driver-side (one collect + union-find) instead of
+    # paying 3-4 jobs per propagation round — near-dup clusters at
+    # bench scale resolve in milliseconds locally. The distributed
+    # paths below are unchanged for every other case. The count also
+    # materializes the persist the loop needs.
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    integral = all(
-        isinstance(edges.schema[c].dataType,
-                   (ByteType, ShortType, IntegerType, LongType))
-        for c in ("src", "dst")
-    )
-    if integral and edges.count() <= _DRIVER_COMPONENTS_MAX:
-        out = _components_driver(edges)
-        edges.unpersist()
-        return out
+    from cuckoofilter_spark.operators.build import bounded_collect
+
+    id_type = edges.schema["src"].dataType
+    if isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        tbl = bounded_collect(edges, n_rows=edges.count())
+        if tbl is not None:
+            out = _components_driver(edges.sparkSession, tbl, id_type)
+            edges.unpersist()
+            return out
     labels = (
         edges.select(F.col("src").alias("doc"))
         .distinct()

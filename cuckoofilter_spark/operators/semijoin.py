@@ -23,15 +23,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from cuckoofilter_spark.operators.build import build_sketch_shards
+from cuckoofilter_spark.operators.build import (
+    bounded_collect, build_sketch_shards, collected_keys, driver_budget_rows,
+    driver_sketch_blob, hash_string_keys,
+)
 from cuckoofilter_spark.operators.merge import merge_shards_to_blob
 from cuckoofilter_spark.operators.probe import might_contain_udf
-
-# dims at or below this capacity build the membership blob driver-side
-# from one distinct-key collect (<= 32 MB of longs) — see
-# build_membership_blob round-8 note
-_DRIVER_BUILD_MAX = 1 << 22
 
 
 def build_membership_blob(
@@ -39,79 +38,42 @@ def build_membership_blob(
     bits_per_item: int = 12, seed: int = 2014, capacity: int | None = None,
     target_load: float = 0.85,
 ) -> bytes:
-    """Build + merge a membership sketch over ``dim[dim_key]``.
+    """Build + merge a membership sketch over ``dim[dim_key]`` (string
+    keys are hashed with ``build.string_key_expr``).
 
-    ``capacity`` defaults to ``dim.count()``; either way it is run
-    through ``suggest_capacity`` (core/cuckoo.py), the single home of
-    the merged-load guard: a merged filter above ~0.96 load can
-    overflow (reference pre-doubles at 0.96,
-    src/cuckoofilter.h:92-95), so size for ≤ ``target_load`` merged.
+    ``capacity`` defaults to the distinct key count (driver build) or
+    ``dim.count()`` (distributed build); either way it is run through
+    ``suggest_capacity`` (core/cuckoo.py), the single home of the
+    merged-load guard: a merged filter above ~0.96 load can overflow
+    (reference pre-doubles at 0.96, src/cuckoofilter.h:92-95), so size
+    for ≤ ``target_load`` merged.
     """
-    return _blob_and_keys(
-        dim, dim_key, kind=kind, bits_per_item=bits_per_item, seed=seed,
-        capacity=capacity, target_load=target_load,
-    )[0]
-
-
-def _blob_and_keys(
-    dim: DataFrame, dim_key: str, *, kind: str = "cuckoo",
-    bits_per_item: int = 12, seed: int = 2014, capacity: int | None = None,
-    target_load: float = 0.85,
-):
-    """(blob, keys_pdf | None): ``build_membership_blob`` plus — when
-    the round-8 driver-side small-dim path ran on a RAW (unhashed)
-    integral key — the collected distinct-key pandas frame, so
-    ``filter_semi_join``/``filter_anti_join`` can reuse it for the
-    exact verify join instead of re-scanning + re-distincting the dim
-    inside the final job."""
     from cuckoofilter_spark.core.cuckoo import suggest_capacity
 
-    if kind in ("cuckoo", "semisort") and (
-        capacity is None or capacity <= _DRIVER_BUILD_MAX
-    ):
-        # Round 8: SMALL dims build driver-side from one distinct-key
-        # collect (8 bytes/key) instead of a count job + shard-build +
-        # merge round — the blob is KB..MB either way and membership
+    if kind in ("cuckoo", "semisort"):
+        # Round 8: dims within the driver budget build driver-side from
+        # one distinct-key collect instead of a count job + shard build
+        # + merge round — the blob is KB..MB either way and membership
         # answers are identical (FPR-pattern noise only, always
-        # exact-verified or bound-checked downstream). The LIMIT
-        # bounds what the driver can receive: when it fires (dim past
-        # the cap) we fall through to the count + distributed build.
-        import numpy as np
-
-        from pyspark.sql.types import StringType
-
-        from cuckoofilter_spark.operators.build import (
-            check_add_statuses, string_key_expr,
-        )
-        from cuckoofilter_spark.core.registry import make_sketch
-
-        key_col = F.col(dim_key)
-        if isinstance(dim.schema[dim_key].dataType, StringType):
-            key_col = string_key_expr(key_col)
-        # JVM-side null drop BEFORE toPandas: a nullable int column
-        # would otherwise arrive as float64 and round keys >= 2^53.
-        # Gate with a distinct COUNT, not a LIMIT: a global limit
-        # funnels every surviving row through one task before the
-        # collect (measured 0.78 s vs 0.17+0.17 s for count + parallel
-        # toPandas on a 700k-key dim).
+        # exact-verified or bound-checked downstream). The null drop
+        # runs JVM-side; the distinct COUNT picks the path and lets
+        # the collect run in parallel.
+        key = hash_string_keys(F.col(dim_key), dim.schema[dim_key].dataType)
         kdf = (
-            dim.select(key_col.alias("__k"))
+            dim.select(key.alias("__k"))
             .filter(F.col("__k").isNotNull()).distinct()
         )
-        n_distinct = kdf.count()
-        if n_distinct <= _DRIVER_BUILD_MAX:
-            rows = kdf.toPandas()
-            keys = rows["__k"].to_numpy(dtype=np.int64).view(np.uint64)
-            cap = suggest_capacity(
-                int(capacity or len(keys)), target_load=target_load
-            )
-            sk = make_sketch(
-                kind, max_num_keys=cap,
-                bits_per_item=bits_per_item, seed=seed,
-            )
-            check_add_statuses(sk.add_many(keys), "build_membership_blob")
-            hashed = isinstance(dim.schema[dim_key].dataType, StringType)
-            return sk.to_bytes(), (None if hashed else rows)
+        if capacity is None or capacity <= driver_budget_rows(kdf):
+            tbl = bounded_collect(kdf, n_rows=kdf.count())
+            if tbl is not None:
+                keys = collected_keys(tbl)
+                cap = suggest_capacity(
+                    int(capacity or len(keys)), target_load=target_load
+                )
+                return driver_sketch_blob(
+                    kind, keys, "build_membership_blob", max_num_keys=cap,
+                    bits_per_item=bits_per_item, seed=seed,
+                )
     if capacity is None:
         capacity = dim.count()
     capacity = suggest_capacity(int(capacity), target_load=target_load)
@@ -135,7 +97,30 @@ def _blob_and_keys(
     # merges so a 10^5-shard dim build never fans every shard blob
     # into the driver — the aggregate-then-merge shape the reference's
     # own merge design exists for (SURVEY §2.1 merge row).
-    return merge_shards_to_blob(shards, dedup=(kind == "cuckoo")), None
+    return merge_shards_to_blob(shards, dedup=(kind == "cuckoo"))
+
+
+def _probe_parts(fact, key, dim, dim_key, *, kind, bits_per_item, seed):
+    """(key column, its filter-probe column, the dim's distinct keys
+    ``__dk``). The probe hashes string keys exactly as the build does;
+    the exact verify joins the raw values. Measured round 8:
+    re-creating collected dim keys as a driver-local DataFrame LOSES to
+    the JVM recompute (4.3 s vs 2.4 s on a 690k-key dim), so the dim
+    side is re-scanned."""
+    blob = build_membership_blob(
+        dim, dim_key, kind=kind, bits_per_item=bits_per_item, seed=seed
+    )
+    probe = might_contain_udf(fact.sparkSession, blob)
+    key_col = F.col(key) if isinstance(key, str) else key
+    dt = fact.select(key_col).schema[0].dataType
+    hit = probe(hash_string_keys(key_col, dt))
+    if isinstance(dt, StringType):
+        # xxhash64(NULL) is its seed, not NULL: a NULL key must not hit.
+        # (Not a NULL probe input: a nullable long column reaches the
+        # pandas probe as float64 and loses the hash's low bits.)
+        hit = key_col.isNotNull() & hit
+    dim_keys = dim.select(F.col(dim_key).alias("__dk")).distinct()
+    return key_col, hit, dim_keys
 
 
 def filter_semi_join(
@@ -148,31 +133,19 @@ def filter_semi_join(
     ``exact=True`` (default) appends a broadcast left-semi join so the
     result is exactly the semi-join — the sketch only *prunes*.
     ``exact=False`` returns the pure approximate filter (≤FPR extra
-    rows, zero missing rows).
+    rows, zero missing rows). String keys work as they are: both sides
+    hash them for the probe and the verify compares the strings.
     """
-    spark = fact.sparkSession
-    blob, keys_pdf = _blob_and_keys(
-        dim, dim_key, kind=kind, bits_per_item=bits_per_item, seed=seed
+    key_col, hit, dim_keys = _probe_parts(
+        fact, key, dim, dim_key, kind=kind, bits_per_item=bits_per_item,
+        seed=seed,
     )
-    probe = might_contain_udf(spark, blob)
-    key_col = F.col(key) if isinstance(key, str) else key
-    pruned = fact.filter(probe(key_col))
+    pruned = fact.filter(hit)
     if not exact:
         return pruned
-    dim_keys = _dim_keys_df(spark, dim, dim_key, keys_pdf)
     return pruned.join(
         F.broadcast(dim_keys), on=key_col == F.col("__dk"), how="left_semi"
     )
-
-
-def _dim_keys_df(spark, dim: DataFrame, dim_key: str, keys_pdf) -> DataFrame:
-    """The exact-verify join's distinct-key side. Measured round 8:
-    re-creating the collected keys as a driver-local DataFrame LOSES
-    to the JVM recompute (broadcast-building a 690k-row
-    LocalTableScan: 4.3 s vs 2.4 s for the parallel scan + distinct +
-    broadcast), so the keys_pdf reuse is deliberately NOT taken —
-    kept as a parameter so the A/B is one-line to revisit."""
-    return dim.select(F.col(dim_key).alias("__dk")).distinct()
 
 
 def filter_anti_join(
@@ -201,17 +174,14 @@ def filter_anti_join(
     ``probe(NULL)`` is NULL — failing both the ``~probe`` and
     ``probe`` filters — so NULL rows are routed through an explicit
     ``isNull`` arm rather than silently dropped."""
-    spark = fact.sparkSession
-    blob, keys_pdf = _blob_and_keys(
-        dim, dim_key, kind=kind, bits_per_item=bits_per_item, seed=seed
+    key_col, hit, dim_keys = _probe_parts(
+        fact, key, dim, dim_key, kind=kind, bits_per_item=bits_per_item,
+        seed=seed,
     )
-    probe = might_contain_udf(spark, blob)
-    key_col = F.col(key) if isinstance(key, str) else key
-    misses = fact.filter(key_col.isNull() | ~probe(key_col))
+    misses = fact.filter(key_col.isNull() | ~hit)
     if not exact:
         return misses
-    dim_keys = _dim_keys_df(spark, dim, dim_key, keys_pdf)
-    recovered = fact.filter(probe(key_col)).join(
+    recovered = fact.filter(hit).join(
         F.broadcast(dim_keys), on=key_col == F.col("__dk"), how="left_anti"
     )
     return misses.unionByName(recovered)

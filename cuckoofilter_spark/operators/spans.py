@@ -126,7 +126,10 @@ def _frequent_hits(
     only ~2b/2^f of infrequent positions leak through to be killed by
     the exact join."""
     from cuckoofilter_spark.core.cuckoo import suggest_capacity
-    from cuckoofilter_spark.operators.build import build_sketch_shards
+    from cuckoofilter_spark.operators.build import (
+        bounded_collect, build_sketch_shards, collected_keys,
+        driver_sketch_blob,
+    )
     from cuckoofilter_spark.operators.merge import merge_shards_to_blob
     from cuckoofilter_spark.operators.probe import might_contain_udf
 
@@ -142,30 +145,23 @@ def _frequent_hits(
     if n_freq == 0:
         freq.unpersist()
         return None, None
-    if n_freq <= (1 << 22):
-        # round 8: small frequent sets build the gate filter
-        # driver-side from one collect (8 bytes/gram) instead of a
-        # 32-task shard build + merge round — same blob role, FPR
-        # pattern noise only (the exact join below decides)
-        from cuckoofilter_spark.core.cuckoo import CuckooFilter
-        from cuckoofilter_spark.operators.build import check_add_statuses
-
-        keys = (
-            freq.toPandas()["gh"].to_numpy(dtype=np.int64)
-            .view(np.uint64)
+    cap = max(suggest_capacity(n_freq), 1024)
+    collected = bounded_collect(freq, n_rows=n_freq)
+    if collected is not None:
+        # round 8: frequent sets within the driver budget build the gate
+        # filter driver-side from one collect instead of a 32-task
+        # shard build + merge round — same blob role, FPR pattern noise
+        # only (the exact join below decides)
+        blob = driver_sketch_blob(
+            "cuckoo", collected_keys(collected), "_frequent_hits",
+            max_num_keys=cap, bits_per_item=bits_per_item, seed=filter_seed,
         )
-        f = CuckooFilter(
-            max(suggest_capacity(n_freq), 1024),
-            bits_per_item, seed=filter_seed,
-        )
-        check_add_statuses(f.add_many(keys), "_frequent_hits")
-        blob = f.to_bytes()
     else:
         blob = merge_shards_to_blob(
             build_sketch_shards(
                 freq, "gh", kind="cuckoo", lineage=False,
-                max_num_keys=max(suggest_capacity(n_freq), 1024),
-                bits_per_item=bits_per_item, seed=filter_seed,
+                max_num_keys=cap, bits_per_item=bits_per_item,
+                seed=filter_seed,
             ),
             dedup=True,
         )

@@ -667,10 +667,10 @@ def run_streaming_decontam(
     (flagged rows carry ``n_overlap``) against a STATIC eval set.
 
     The eval side is built ONCE before the stream starts. Within the
-    driver cap the stream holds one fused gate + verify UDF
+    driver budget the stream holds one fused gate + verify UDF
     (``ngram_overlap_udf`` over the driver's eval key array: one blob
     and one key broadcast for the stream's lifetime — creating it per
-    batch would re-broadcast both every trigger). Above the cap the
+    batch would re-broadcast both every trigger). Above it the
     exact-verify gram table is parked under ``<out_dir>/_eval/ngrams``
     so each micro-batch's explode+join reads it executor-side (no
     driver-held row set, no cross-session DataFrame reuse). Per-batch

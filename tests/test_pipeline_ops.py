@@ -280,25 +280,106 @@ def test_decontaminate_gate_never_drops(spark, docs):
     assert lo == hi and len(lo) > 0
 
 
-def _decontam_frames(fn, forced_fallback: bool, monkeypatch):
-    """Run ``fn`` with the driver eval path, or with the driver cap
-    forced to 0 (the distributed eval build + explode/join verify)."""
-    import cuckoofilter_spark.operators.decontam as dc
+def _gate_frames(fn, forced_fallback: bool, monkeypatch):
+    """Run ``fn`` within the driver budget, or with the budget forced
+    to 0 (every driver-side build takes its distributed path)."""
+    import cuckoofilter_spark.operators.build as build_mod
 
     with monkeypatch.context() as m:
         if forced_fallback:
-            m.setattr(dc, "_DRIVER_EVAL_BUILD_MAX", 0)
+            m.setattr(build_mod, "DRIVER_BUDGET_BYTES", 0)
         df = fn()
         return df.schema, df.sort(df.columns[0]).toPandas()
 
 
-@pytest.mark.parametrize("op", ["decontaminate", "novelty_report"])
-def test_decontam_gate_both_ways(spark, docs, op, monkeypatch):
-    """The driver-cap gate never changes an answer: the fused driver
-    path and the forced above-cap path return the same schema and
-    rows."""
+def _assert_gate_both_ways(fn, monkeypatch):
+    """``fn`` returns the same schema and rows on both sides of the
+    driver budget; returns the rows."""
     from pandas.testing import assert_frame_equal
 
+    schema, driver = _gate_frames(fn, False, monkeypatch)
+    schema_f, forced = _gate_frames(fn, True, monkeypatch)
+    assert schema == schema_f
+    assert_frame_equal(driver, forced)
+    return driver
+
+
+def _join_inputs(spark, id_type: str):
+    """(fact, dim) for the semi/anti-join gate tests, both keyed by an
+    ``id_type`` column: fact ``k`` over 300 values and some NULLs, dim
+    ``dk`` over every third of the values."""
+    def key(e: str) -> str:
+        if id_type == "string":
+            return f"concat('k', cast({e} AS string))"
+        return f"cast({e} AS {id_type})"
+
+    fact = spark.range(0, 2000, numPartitions=4).selectExpr(
+        "id", f"IF(id % 97 = 5, NULL, {key('id % 300')}) AS k"
+    )
+    dim = spark.range(0, 300, 3, numPartitions=3).selectExpr(
+        f"{key('id')} AS dk"
+    )
+    return fact, dim
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+@pytest.mark.parametrize("op", ["filter_semi_join", "filter_anti_join"])
+def test_semijoin_gate_both_ways(spark, op, id_type, monkeypatch):
+    """The membership build's driver budget never changes a join
+    answer, for int64, int32 and string keys; the exact answer is the
+    plain Spark join's."""
+    import cuckoofilter_spark.operators.semijoin as sj
+
+    fact, dim = _join_inputs(spark, id_type)
+    rows = _assert_gate_both_ways(
+        lambda: getattr(sj, op)(fact, "k", dim, "dk"), monkeypatch
+    )
+    how = "left_semi" if op == "filter_semi_join" else "left_anti"
+    want = (
+        fact.join(dim.withColumnRenamed("dk", "k"), "k", how)
+        .select("id", "k").sort("id", "k").toPandas()
+    )
+    assert 0 < len(rows) < 2000
+    assert rows["id"].tolist() == want["id"].tolist()
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int"])
+def test_span_stats_gate_both_ways(spark, docs, id_type, monkeypatch):
+    """duplicated_span_stats: the gate filter's driver and distributed
+    builds give the same report."""
+    from cuckoofilter_spark.operators.spans import duplicated_span_stats
+
+    d = docs.select(F.col("doc_id").cast(id_type).alias("doc_id"), "text")
+    rows = _assert_gate_both_ways(
+        lambda: duplicated_span_stats(d, "doc_id", "text", k=3),
+        monkeypatch,
+    )
+    assert (rows["covered"] > 0).any()
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int"])
+def test_duplicate_clusters_gate_both_ways(spark, id_type, monkeypatch):
+    """duplicate_clusters: the driver union-find and the distributed
+    label propagation give the same schema and (doc, rep) rows."""
+    from cuckoofilter_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 5), (9, 8), (8, 10), (3, 4), (20, 21)],
+        f"doc_a {id_type}, doc_b {id_type}",
+    )
+    rows = _assert_gate_both_ways(lambda: duplicate_clusters(pairs),
+                                  monkeypatch)
+    assert dict(zip(rows["doc"], rows["rep"])) == {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 7: 5, 8: 8, 9: 8, 10: 8,
+        20: 20, 21: 20,
+    }
+
+
+@pytest.mark.parametrize("op", ["decontaminate", "novelty_report"])
+def test_decontam_gate_both_ways(spark, docs, op, monkeypatch):
+    """The driver-budget gate never changes an answer: the fused
+    driver path and the forced above-budget path return the same
+    schema and rows."""
     import cuckoofilter_spark.operators.decontam as dc
 
     ev = docs.filter(F.col("doc_id") % 101 == 0)
@@ -309,18 +390,14 @@ def test_decontam_gate_both_ways(spark, docs, op, monkeypatch):
     def run():
         return fn(corpus, ev, "doc_id", "text", n=3, **kw)
 
-    schema, driver = _decontam_frames(run, False, monkeypatch)
-    schema_f, forced = _decontam_frames(run, True, monkeypatch)
-    assert schema == schema_f
-    assert len(driver) > 0
-    assert_frame_equal(driver, forced)
+    assert len(_assert_gate_both_ways(run, monkeypatch)) > 0
 
 
 def test_overlap_report_caller_gram_table(spark, docs, monkeypatch):
     """overlap_report fed a gram table the caller built (distinct
     shingle hashes from ``shingle_sets``, not ``eval_ngram_filter``'s
     DataFrame) answers like ``decontaminate`` on both sides of the
-    driver cap."""
+    driver budget."""
     from pandas.testing import assert_frame_equal
 
     from cuckoofilter_spark.operators.decontam import (
@@ -335,12 +412,12 @@ def test_overlap_report_caller_gram_table(spark, docs, monkeypatch):
         shingle_sets(ev, "doc_id", "text", shingle_k=3, seed=7)
         .select(F.explode("sh").alias("gh")).distinct()
     )
-    _, want = _decontam_frames(
+    _, want = _gate_frames(
         lambda: decontaminate(corpus, ev, "doc_id", "text", n=3),
         False, monkeypatch)
     assert len(want) > 0
     for forced in (False, True):
-        _, got = _decontam_frames(
+        _, got = _gate_frames(
             lambda: overlap_report(corpus, blob, grams, "doc_id", "text",
                                    n=3),
             forced, monkeypatch)
@@ -921,7 +998,7 @@ def test_filter_anti_join_keeps_null_keys(spark):
     assert {2, 4} <= approx <= truth
 
 
-def test_build_membership_blob_never_fans_into_driver(spark):
+def test_build_membership_blob_never_fans_into_driver(spark, monkeypatch):
     """The blob build inside filter_semi_join must go through the
     driver-threshold switch: above 64 shards the shard blobs tree-
     merge executor-side, and collect_merged (the driver fan-in) must
@@ -930,22 +1007,35 @@ def test_build_membership_blob_never_fans_into_driver(spark):
     from cuckoofilter_spark.operators.probe import might_contain_udf
     from cuckoofilter_spark.operators.semijoin import build_membership_blob
 
+    import cuckoofilter_spark.operators.build as build_mod
+
     seen_counts = []
+    tree_counts = []
     real = merge_mod.collect_merged
+    real_tree = merge_mod.tree_merge
 
     def spy(shards, dedup=True):
         seen_counts.append(shards.count())
         return real(shards, dedup=dedup)
 
-    orig = merge_mod.collect_merged
-    merge_mod.collect_merged = spy
-    try:
-        dim = spark.range(0, 20_000).selectExpr("id AS k").repartition(80)
-        blob = build_membership_blob(dim, "k", kind="cuckoo")
-    finally:
-        merge_mod.collect_merged = orig
+    def tree_spy(shards, **kw):
+        tree_counts.append(kw.get("num_shards"))
+        return real_tree(shards, **kw)
 
+    monkeypatch.setattr(merge_mod, "collect_merged", spy)
+    monkeypatch.setattr(merge_mod, "tree_merge", tree_spy)
+    # budget 0: the distributed shard build + merge runs (a 20k-key dim
+    # is within the real budget and would never reach the merge)
+    monkeypatch.setattr(build_mod, "DRIVER_BUDGET_BYTES", 0)
+    small = spark.range(0, 20_000).selectExpr("id AS k").repartition(8)
+    build_membership_blob(small, "k", kind="cuckoo")
+    dim = spark.range(0, 20_000).selectExpr("id AS k").repartition(80)
+    blob = build_membership_blob(dim, "k", kind="cuckoo")
+    monkeypatch.undo()
+
+    assert seen_counts, "the driver merge never ran"
     assert all(c <= 64 for c in seen_counts), seen_counts
+    assert tree_counts == [80], tree_counts
     # and the tree-merged blob is a working filter: zero false negatives
     probe = might_contain_udf(spark, blob)
     n_missed = (

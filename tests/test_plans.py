@@ -95,6 +95,21 @@ def test_shuffle_distinct_plan_is_partial_agg(spark):
     assert plan.count("MapInArrow") >= 2  # pre-unique + shard build
     assert "Generate" not in plan and "Explode" not in plan
     assert "HashAggregate" in plan and "Exchange" in plan
+    # scalar int and string columns: no Arrow pre-unique, the JVM
+    # distinct (strings hashed to 8-byte keys first) feeds the build
+    scalars = spark.range(500).selectExpr(
+        "id % 50 AS i", "concat('w', id % 50) AS s"
+    )
+    for col in ("i", "s"):
+        plan = explain_str(build_sketch_shards(
+            scalars, col, kind="cuckoo", lineage=False,
+            max_num_keys=1 << 16, bits_per_item=12, seed=7,
+            strategy="shuffle_distinct",
+        ))
+        assert "MapInArrow" in plan and "_partition_unique" not in plan
+        assert "Generate" not in plan
+        assert plan.count("HashAggregate") >= 2 and "Exchange" in plan
+        assert ("xxhash64" in plan) == (col == "s")
 
 
 def test_shuffle_count_plan_is_partial_count_agg(spark):
@@ -114,6 +129,14 @@ def test_shuffle_count_plan_is_partial_count_agg(spark):
     plan = explain_str(shards)
     assert "Generate" in plan or "Explode" in plan
     assert plan.count("HashAggregate") >= 2  # partial + final count
+    assert "Exchange" in plan
+    # the value-sketch analog: shuffle_value_count, same plan shape
+    plan = explain_str(build_sketch_shards(
+        tokens, "tokens", kind="tdigest", lineage=False,
+        strategy="shuffle_value_count", delta=100.0, seed=7,
+    ))
+    assert "Generate" in plan or "Explode" in plan
+    assert plan.count("HashAggregate") >= 2
     assert "Exchange" in plan
     # strategy='auto' resolution — TWO gates (round-4 verdict item 4):
     # size (Catalyst estimate, free) AND sampled duplication ratio.
@@ -427,19 +450,19 @@ def test_decontaminate_plan_gate_below_explode(spark):
     assert "ArrowEvalPython" in plan
     assert "Generate" not in plan and "Join" not in plan
 
-    # big-eval fallback (forced by shrinking the driver cap): the
+    # big-eval fallback (forced by shrinking the driver budget): the
     # probe gate runs BELOW the hit-hash explode, and the verify join
     # broadcasts the eval side — the pre-round-8 scale shape
-    import cuckoofilter_spark.operators.decontam as dc
+    import cuckoofilter_spark.operators.build as build_mod
 
-    old = dc._DRIVER_EVAL_BUILD_MAX
-    dc._DRIVER_EVAL_BUILD_MAX = 0
+    old = build_mod.DRIVER_BUDGET_BYTES
+    build_mod.DRIVER_BUDGET_BYTES = 0
     try:
         plan = explain_str(decontaminate(
             corpus, ev, "doc_id", "text", n=3, min_overlap=1,
         ))
     finally:
-        dc._DRIVER_EVAL_BUILD_MAX = old
+        build_mod.DRIVER_BUDGET_BYTES = old
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     gen = plan.find("Generate")          # the candidate-side explode

@@ -676,7 +676,7 @@ def test_shuffle_value_count_state_identity_discrete(spark):
 
 def test_shuffle_strategies_drop_null_keys(spark):
     """Null keys (null array elements, null scalars) must be dropped
-    JVM-side in the shuffle strategies exactly as _to_uint64 drops
+    JVM-side in the shuffle strategies exactly as the Arrow flatten drops
     them in the local path — previously a null token made the keys and
     counts arrays different lengths and crashed add_many at scale."""
     from pyspark.sql.types import (
