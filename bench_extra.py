@@ -70,10 +70,10 @@ def main() -> None:
         from cuckoofilter_spark.operators.merge import merge_shards_to_blob
 
         # phase a: the build's normalize + collapse + route stages (Arrow
-        # pre-unique -> JVM distinct -> shard repartition), no kernel
+        # per-partition unique packed by shard -> one exchange), no kernel
         proj, _ = routed_keys(tokens, "tokens", strategy="shuffle_distinct")
-        timed("cuckoo.a_jvm_distinct", lambda: noop(proj))
-        # phase b: full shard build (JVM collapse + python build)
+        timed("cuckoo.a_route", lambda: noop(proj))
+        # phase b: full shard build (route + python build)
         shards = build_sketch_shards(
             tokens, "tokens", kind="cuckoo", lineage=False,
             max_num_keys=1 << 21, bits_per_item=12, seed=7,

@@ -149,8 +149,8 @@ class BlockedBloomFilter:
     def from_bytes(cls, blob: bytes) -> "BlockedBloomFilter":
         hs = struct.calcsize("<4sBBxxQQ")
         magic, ver, log_nb, items, seed = struct.unpack("<4sBBxxQQ", blob[:hs])
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad bloom blob")
+        if magic != _MAGIC or ver != 1 or len(blob) != hs + (32 << log_nb):
+            raise ValueError("bad bloom blob")  # checked before allocating
         obj = cls(log_num_buckets=log_nb, seed=seed)
         obj.directory = (
             np.frombuffer(blob[hs:], dtype=np.uint32).reshape(obj.num_buckets, LANES).copy()

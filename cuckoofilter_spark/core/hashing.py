@@ -249,6 +249,32 @@ def murmur2_u64(keys: np.ndarray, seed: int = 0) -> np.ndarray:
     return h
 
 
+def _murmur3_mix(h: np.ndarray, k: np.ndarray) -> np.ndarray:
+    k = _rotl32(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+    return _rotl32(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+
+def spark_hash(keys: np.ndarray, seed: int = 42) -> np.ndarray:
+    """Spark's ``hash(key)`` (``Murmur3Hash``, seed 42) of an integer
+    array, as int32: ``hashInt`` for 8/16/32-bit keys (widened to int),
+    ``hashLong`` (low word, then high word) for 64-bit keys — the
+    function ``repartition`` and ``F.hash`` compute in the JVM."""
+    wide = keys.dtype.itemsize == 8
+    if wide:
+        k0, k1 = _key_words32(keys.view(np.uint64))
+        h = _murmur3_mix(_murmur3_mix(np.uint32(seed), k0), k1)
+    else:
+        k = keys.astype(np.int32, copy=False).view(np.uint32)
+        h = _murmur3_mix(np.uint32(seed), k)
+    h ^= np.uint32(8 if wide else 4)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h.view(np.int32)
+
+
 def superfast_hash_u64(keys: np.ndarray) -> np.ndarray:
     """Hsieh SuperFastHash of the 8 key bytes (reference
     src/hashutil.cc:646-693). Seedless by definition — the length

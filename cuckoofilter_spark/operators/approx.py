@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuckoofilter_spark.operators.build import build_sketch_shards
+from cuckoofilter_spark.operators.build import _pack_dtype, build_sketch_shards
 from cuckoofilter_spark.operators.merge import collect_merged, tree_merge
 
 
@@ -107,11 +107,11 @@ def _sampled_duplication(df: DataFrame, column: str) -> float:
 
 def _auto_strategy(df: DataFrame, column: str, strategy: str,
                    collapsing: str, *, scalars: bool = False) -> str:
-    """Resolve strategy='auto' to ``collapsing`` (a JVM-collapsing build
+    """Resolve strategy='auto' to ``collapsing`` (a collapsing build
     strategy) or 'local'. For a LARGE, HIGH-DUPLICATION column the
-    collapse lets Catalyst's map-side partial aggregate shrink the
-    stream JVM-side, so Arrow ships ~cardinality rows instead of every
-    occurrence — at the 10^9-token scale step that is the difference
+    collapse (a per-partition unique, or a JVM partial count) shrinks
+    the stream so the shard build sees ~cardinality keys instead of
+    every occurrence — at the 10^9-token scale step that is the difference
     between a 23 GB and an 8 MB python-boundary transfer. The cutover
     requires BOTH size (above ``_AUTO_SHUFFLE_MIN_BYTES`` — below it
     the extra exchange's fixed cost dominates) and a sampled
@@ -133,7 +133,10 @@ def _auto_strategy(df: DataFrame, column: str, strategy: str,
 
 def _distinct_strategy(df: DataFrame, column: str, strategy: str) -> str:
     """``_auto_strategy`` for DISTINCT-INSENSITIVE sketches (HLL, KMV:
-    duplicate inserts cannot change the state): 'shuffle_distinct'."""
+    duplicate inserts cannot change the state): 'shuffle_distinct'
+    when it can route the key type."""
+    if strategy == "auto" and _pack_dtype(df.schema[column].dataType) is None:
+        return "local"
     return _auto_strategy(df, column, strategy, "shuffle_distinct")
 
 
@@ -157,7 +160,7 @@ def hll_sketch(df: DataFrame, column: str, p: int = 14, seed: int = 2014,
                tree: bool = False, strategy: str = "auto"):
     """Merged HyperLogLog over ``column`` (scalar int or array<int>).
 
-    ``strategy='auto'`` picks the JVM-side pre-distinct plan for array
+    ``strategy='auto'`` picks ``shuffle_distinct`` for array
     columns (``_distinct_strategy``) — HLL is distinct-insensitive, so
     the registers are identical either way and only the data movement
     changes."""
@@ -677,8 +680,8 @@ def kmv_sketch(df: DataFrame, column: str, k: int = 4096,
     """Merged KMV (bottom-k / theta family) distinct sketch over
     ``column`` — same distributed partial-build + merge shape as the
     other companions; RSE ≈ 1/sqrt(k-2). Distinct-insensitive, so
-    ``strategy='auto'`` applies the same array-column pre-distinct
-    plan as ``hll_sketch``."""
+    ``strategy='auto'`` applies the same array-column
+    ``shuffle_distinct`` cutover as ``hll_sketch``."""
     # distinct=True: see hll_sketch round-8 note (0.88 s -> 0.25 s per
     # partition, same sketch state)
     shards = build_sketch_shards(

@@ -7,18 +7,17 @@ per partition — the ``sketch_shards`` shape of FIXTURES.md §3.
 
 1. **Normalize** (JVM): the key column becomes ``__v``. String keys
    (scalars or array elements) are pre-hashed with
-   ``string_key_expr``. When a JVM collapse follows, array columns
-   that it must see element by element are exploded and null keys
-   are dropped; otherwise the Arrow side flattens and drops nulls.
-2. **Collapse**: ``local`` none; ``shuffle_distinct`` a distinct
-   (array columns are first made unique per partition in Arrow, then
-   the JVM ``distinct`` runs); ``shuffle_count`` and
-   ``shuffle_value_count`` a JVM ``count`` per key.
+   ``string_key_expr``. The JVM count sees exploded, non-null keys;
+   otherwise the Arrow side flattens and drops nulls.
+2. **Collapse**: ``local`` none; ``shuffle_distinct`` a per-partition
+   unique in Arrow, packed as one binary row per shard
+   (``_route_packed``); the ``shuffle_*count`` ones a JVM ``count``.
 3. **Route**: a collapsed stream is repartitioned into ``n_parts``
-   shards on ``shard_key_expr``, so every shard holds a disjoint key
-   range. ``local`` keeps the input partitions and shuffles nothing.
+   shards of disjoint key ranges (``shard_id_expr``). ``local`` keeps
+   the input partitions and shuffles nothing.
 4. **Kernel** (``mapInArrow``): one numpy sketch per partition, fed
-   from one Arrow→numpy flatten (``_flatten``).
+   from ``_flatten`` (``_unpack`` for packed rows, made unique and
+   inserted sorted: a shard blob depends only on its key set).
 
 Scale notes (the whole point):
 - token arrays are flattened **inside Arrow** (``ListArray.values`` is
@@ -51,6 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StringType
 
+from cuckoofilter_spark.core.hashing import spark_hash
 from cuckoofilter_spark.core.registry import (
     SKETCH_KINDS, make_sketch, wire_bytes,
 )
@@ -219,9 +219,10 @@ def _fast_unique_counts(a: np.ndarray):
 
 
 def shard_key_expr(col: str | Column) -> Column:
-    """The expression shuffle_distinct shards partition on. Kept as a
-    named single source of truth: ``delete_from_shards`` recomputes
-    shard ownership as pmod(hash(shard_key_expr(key)), num_shards)."""
+    """The expression shuffled shards partition on (``shuffle_distinct``
+    rows carry it as ``__h``). Kept as a named single source of truth:
+    ``delete_from_shards`` recomputes shard ownership as
+    pmod(hash(shard_key_expr(key)), num_shards)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.hash(c)
 
@@ -272,14 +273,45 @@ def _flatten(cols: Iterable[pa.Array], dtype=None) -> np.ndarray:
     return out if dtype is None else out.astype(dtype, copy=False)
 
 
-def _partition_unique(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Per-partition distinct of a list-typed key column, in Arrow: one
-    ``_fast_unique`` over the flattened, null-free partition. Emits
-    the keys with their input element dtype, so the shard hash and the
-    JVM distinct see exactly the values an explode would produce."""
-    keys = _flatten(b.column(0) for b in batches)
-    if len(keys):
-        yield pa.RecordBatch.from_pydict({"__v": pa.array(_fast_unique(keys))})
+def _pack_dtype(dt: DataType):
+    """The dtype ``shuffle_distinct`` packs ``dt`` keys (or elements)
+    at — integers at their width, strings as xxhash64 longs — or None."""
+    dt = dt.elementType if isinstance(dt, ArrayType) else dt
+    t = {"tinyint": "i1", "smallint": "i2", "int": "i4", "bigint": "i8",
+         "string": "i8"}.get(dt.simpleString())
+    return None if t is None else np.dtype(t)
+
+
+def _route_packed(n_parts: int, dtype: np.dtype):
+    """``shuffle_distinct``'s map stage: an input partition's distinct
+    keys, one row per owning shard (``shard_id_expr``, computed with
+    ``spark_hash``): ``__h`` the inner hash of one of its keys, which
+    ``repartition(n_parts, "__h")`` routes by, and ``__k`` the keys."""
+    def route(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        keys = _fast_unique(_flatten(b.column(0) for b in batches))
+        keys = keys.astype(dtype, copy=False)
+        h = spark_hash(keys)
+        shard = np.mod(spark_hash(h), n_parts)
+        order = np.argsort(shard, kind="stable")
+        counts = np.bincount(shard)
+        counts = counts[counts > 0]
+        ends = np.cumsum(counts)
+        offsets = np.concatenate(([0], ends)) * dtype.itemsize
+        yield pa.RecordBatch.from_arrays([
+            pa.array(h[order[ends - counts]]),
+            pa.Array.from_buffers(pa.binary(), len(counts), [
+                None, pa.py_buffer(offsets.astype(np.int32)),
+                pa.py_buffer(keys[order])]),
+        ], ["__h", "__k"])
+
+    return route
+
+
+def _unpack(col: pa.Array, dtype: np.dtype) -> np.ndarray:
+    """A packed ``__k`` column's keys, zero-copy from its data buffer."""
+    _, offsets, data = col.buffers()
+    o = np.frombuffer(offsets, np.int32, len(col) + 1, 4 * col.offset)
+    return np.frombuffer(data, dtype, (o[-1] - o[0]) // dtype.itemsize, o[0])
 
 
 # strategy -> (collapse, the sketch mode it needs, error otherwise).
@@ -301,10 +333,9 @@ _STRATEGIES = {
 def _normalize(df: DataFrame, column: str, *, collapse: str | None,
                lineage: bool) -> DataFrame:
     """Stage 1: ``column`` as ``__v`` (plus ``__file`` for lineage),
-    string keys hashed. A JVM count sees array elements as exploded
-    rows, and every JVM collapse over scalar rows drops null keys
-    first — the Arrow kernel drops them itself, and a null group's
-    count would otherwise outlive its key."""
+    string keys hashed. The JVM count sees array elements as exploded
+    rows and drops null keys first — the Arrow side drops them itself,
+    and a null group's count would otherwise outlive its key."""
     cols = [F.col(column).alias("__v")]
     if lineage:
         # hidden per-row file provenance from the file-source scan
@@ -316,32 +347,8 @@ def _normalize(df: DataFrame, column: str, *, collapse: str | None,
         dt = dt.elementType
     if _string_keyed(dt):
         src = src.withColumn("__v", hash_string_keys(F.col("__v"), dt))
-    if collapse and not isinstance(dt, ArrayType):
-        src = src.filter(F.col("__v").isNotNull())
-    return src
-
-
-def _collapse(src: DataFrame, collapse: str | None) -> DataFrame:
-    """Stage 2: nothing, a distinct, or a per-key count ``__c``."""
-    if collapse == "distinct":
-        dt = src.schema["__v"].dataType
-        if isinstance(dt, ArrayType):
-            # Round 8: a per-partition unique in Arrow replaces the
-            # exploded JVM distinct, whose partial aggregate over every
-            # occurrence was ~85% of the collapse (4.7 s vs 0.8 s for
-            # the bare explode+scan at the sf1.0 step, 293M tokens).
-            # The JVM distinct STAYS after it: going straight into the
-            # builder ships P×per-partition-cardinality rows (29M at
-            # sf1.0) across the Arrow boundary, where the distinct's
-            # final aggregate leaves ~cardinality (1M) — interleaved
-            # A/B: 5.9 s vs 8.1 s. The boundary crossing, not the
-            # aggregate, is the expensive resource.
-            src = src.select(F.col("__v").alias("__a")).mapInArrow(
-                _partition_unique, f"__v {dt.elementType.simpleString()}"
-            )
-        return src.distinct()
     if collapse == "count":
-        return src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
+        src = src.filter(F.col("__v").isNotNull())
     return src
 
 
@@ -350,25 +357,33 @@ def routed_keys(
     lineage: bool = False, shuffle_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Stages 1-3 of ``build_sketch_shards``: the DataFrame its kernel
-    reads (``__v``, then ``__c`` for counts or ``__file`` for
-    lineage) and the shard count (-1 for ``local``)."""
+    reads — ``__v`` (then ``__file`` for lineage, ``__c`` for counts),
+    or ``__h, __k`` packed rows for ``shuffle_distinct`` — and the
+    shard count (-1 for ``local``)."""
     collapse = _STRATEGIES[strategy][0]
-    src = _collapse(
-        _normalize(df, column, collapse=collapse, lineage=lineage), collapse
-    )
+    dt = df.schema[column].dataType
+    if collapse == "distinct" and _pack_dtype(dt) is None:
+        raise ValueError(f"shuffle_distinct needs integer or string keys;"
+                         f" column {column!r} is {dt.simpleString()}")
+    src = _normalize(df, column, collapse=collapse, lineage=lineage)
     if collapse is None:
         return src, -1
     n_parts = int(shuffle_partitions
                   or df.sparkSession.sparkContext.defaultParallelism)
-    # Stage 3. The explicit user-numbered repartition on hash(__v)
-    # dodges two AQE traps: (a) AQE sizes partitions by BYTES and would
-    # coalesce the ~8B/key collapsed output into one partition,
-    # serializing the python build; (b) repartition(n, "__v") gets
-    # COLLAPSED into the aggregate's own ENSURE_REQUIREMENTS exchange
-    # (same clustering), which AQE may coalesce — hash(__v) stays a
-    # distinct, non-coalescible expression. Shard ownership stays
-    # computable (shard_key_expr).
-    return src.repartition(n_parts, shard_key_expr("__v")), n_parts
+    # A user-numbered repartition: AQE sizes partitions by BYTES and
+    # would coalesce the small collapsed stream into one partition.
+    if collapse == "distinct":
+        # Round 8 kept a JVM distinct here: a ROW per key per input
+        # partition cost more at the Arrow boundary (8.1 s vs 5.9 s at
+        # sf1.0). Packed rows cross it per byte: 4.08M -> 7.22M tokens/s
+        # on the 14.6M-token build (4 cores, 10 interleaved pairs).
+        routed = src.mapInArrow(_route_packed(n_parts, _pack_dtype(dt)),
+                                "__h int, __k binary")
+        return routed.repartition(n_parts, "__h"), n_parts
+    # hash(__v), not __v: the count's own ENSURE_REQUIREMENTS exchange,
+    # which AQE may coalesce, would absorb a repartition on __v
+    counted = src.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
+    return counted.repartition(n_parts, shard_key_expr("__v")), n_parts
 
 
 def build_sketch_shards(
@@ -404,9 +419,11 @@ def build_sketch_shards(
       collapses cross-shard duplicates. Best when the key space is
       SPARSE relative to a shard: merge work = Σ per-shard distinct ≈
       global distinct. ``lineage=True`` records the input files.
-    - ``'shuffle_distinct'`` (set-mode sketches): a JVM distinct with
-      a map-side partial aggregate, then each of ``shuffle_partitions``
-      shards builds over a DISJOINT key range. Best when the key space
+    - ``'shuffle_distinct'`` (set-mode sketches, integer or string
+      keys): each input partition's distinct keys go to their shard
+      packed as one binary row per shard, in one exchange; each of
+      ``shuffle_partitions`` shards builds over a DISJOINT key range.
+      Best when the key space
       SATURATES each shard (hot vocab): merge work collapses from
       P×cardinality to cardinality — for a 2^20-token vocab at 10^12
       sequences, 10^11 vs 10^6 merge inserts.
@@ -443,7 +460,9 @@ def build_sketch_shards(
         shuffle_partitions=shuffle_partitions,
     )
     counted = collapse == "count"
-    unique = distinct and collapse is None  # shuffled keys are distinct
+    pack = _pack_dtype(df.schema[column].dataType)
+    # a packed shard holds each input partition's distinct keys
+    unique = collapse == "distinct" or (distinct and collapse is None)
     key_dtype = np.float64 if value_based else np.int64
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -454,7 +473,9 @@ def build_sketch_shards(
         for b in batches:
             if lineage:
                 files.update(b.column(1).unique().to_pylist())
-            k = _flatten([b.column(0)], key_dtype)
+            k = (_unpack(b.column(1), pack).astype(np.int64, copy=False)
+                 if collapse == "distinct"
+                 else _flatten([b.column(0)], key_dtype))
             c = _flatten([b.column(1)], np.int64) if counted else None
             if not len(k):
                 continue

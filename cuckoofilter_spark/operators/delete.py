@@ -1,8 +1,8 @@
 """Distributed delete — route each delete key to the shard that owns it.
 
 Applies to shard tables built with ``strategy='shuffle_distinct'``:
-those shards hold hash-DISJOINT key ranges under Spark's
-``HashPartitioning``, i.e. shard_id == pmod(hash(key), num_shards), so
+those shards hold hash-DISJOINT key ranges, shard_id ==
+pmod(hash(hash(key)), num_shards) (``build.shard_id_expr``), so
 ownership is computable without any lookup structure. Keys and shards
 cogroup by shard_id; each group deserializes its filter once, runs the
 numpy ``delete_many`` batch, and re-emits the shard row

@@ -1,7 +1,7 @@
 """Broadcast membership probe — distributed ``Contain``.
 
 The merged sketch blob is broadcast once per job; a scalar
-``pandas_udf`` probes whole Arrow batches against it with the
+``arrow_udf`` probes whole Arrow batches against it with the
 vectorized two-bucket numpy gather (reference semantics:
 ``src/cuckoofilter.h:166-185``; zero false negatives). Usable directly
 inside ``df.filter(...)`` — the classic pre-join pruning role
@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -40,27 +41,22 @@ def might_contain_udf(spark: SparkSession, blob: bytes):
     """Return a Column-function: ``f(col) -> boolean`` membership probe.
 
     Works for any membership sketch kind (cuckoo, bloom) — dispatch on
-    the blob magic. Keys: integer column, reinterpreted as uint64
-    (matching the build side's view).
+    the blob magic. Keys: integer column, as int64 reinterpreted as
+    uint64 (matching the build side's view).
     """
     import uuid
 
     bc = spark.sparkContext.broadcast(bytes(blob))
     cache_key = uuid.uuid4().hex
 
-    @F.pandas_udf(BooleanType())
-    def probe(s: pd.Series) -> pd.Series:
-        sk = _get_filter(bc, cache_key)
-        keys = s.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        hits = sk.contains_many(keys)
-        na = s.isna().to_numpy()
-        if na.any():
-            # null key -> null result (never "probe key 0"), matching
-            # Spark's built-in might_contain null semantics
-            out = pd.array(hits, dtype="boolean")
-            out[na] = None
-            return pd.Series(out, dtype="boolean")
-        return pd.Series(hits)
+    @F.arrow_udf(BooleanType())
+    def probe(s: pa.Array) -> pa.Array:
+        # int64 from Arrow (in pandas a batch holding a null is float64);
+        # null key -> null result (never "probe key 0"), matching
+        # Spark's built-in might_contain null semantics
+        keys = s.cast(pa.int64()).fill_null(0).to_numpy().view(np.uint64)
+        hits = _get_filter(bc, cache_key).contains_many(keys)
+        return pa.array(hits, mask=s.is_null().to_numpy(zero_copy_only=False))
 
     def apply(col: str | Column) -> Column:
         return probe(F.col(col) if isinstance(col, str) else col)

@@ -5,7 +5,7 @@ mechanically so regressions fail loudly:
 - aggregations run partial (map-side) before the exchange,
 - the membership probe prunes BEFORE the join,
 - the tokens build plan contains no explode/shuffle in local mode and
-  a partial-aggregate distinct in shuffle mode.
+  one exchange of packed per-partition distincts in shuffle mode.
 """
 
 from __future__ import annotations
@@ -75,40 +75,38 @@ def test_local_build_plan_has_no_shuffle(spark):
     assert "Generate" not in plan, "local build must not explode arrays"
 
 
+def plan_nodes(df) -> list[str]:
+    """The operator names of ``df``'s physical plan tree, top down."""
+    import re
+
+    tree = explain_str(df).split("\n\n")[0]
+    return re.findall(r"(\w+) \(\d+\)$", tree, re.M)
+
+
 def test_shuffle_distinct_plan_is_partial_agg(spark):
+    """The shuffle_distinct plan: one Arrow map stage per input
+    partition (flatten, unique, group by owning shard, pack), ONE
+    exchange of the packed rows, the shard build — no explode, no JVM
+    aggregate. String keys are hashed to 8-byte keys first."""
     from cuckoofilter_spark.operators.build import build_sketch_shards
     from cuckoofilter_spark.sources.tokens import synth_tokens_df
 
-    tokens = synth_tokens_df(spark, 50, seed=1)
-    shards = build_sketch_shards(
-        tokens, "tokens", kind="cuckoo", lineage=False,
-        max_num_keys=1 << 16, bits_per_item=12, seed=7,
-        strategy="shuffle_distinct",
-    )
-    plan = explain_str(shards)
-    # round 8: the token arrays flatten + pre-collapse per partition in
-    # Arrow (MapInArrow, np.unique) — no explode generates per-token
-    # rows — then the JVM distinct (HashAggregate + Exchange) collapses
-    # the per-partition distincts to ~cardinality rows BEFORE the build
-    # stage's Arrow boundary (measured: shipping the uncollapsed rows
-    # into the builder instead costs more than the aggregate saves)
-    assert plan.count("MapInArrow") >= 2  # pre-unique + shard build
-    assert "Generate" not in plan and "Explode" not in plan
-    assert "HashAggregate" in plan and "Exchange" in plan
-    # scalar int and string columns: no Arrow pre-unique, the JVM
-    # distinct (strings hashed to 8-byte keys first) feeds the build
+    tokens = synth_tokens_df(spark, 50, seed=1).select("tokens")
     scalars = spark.range(500).selectExpr(
         "id % 50 AS i", "concat('w', id % 50) AS s"
     )
-    for col in ("i", "s"):
-        plan = explain_str(build_sketch_shards(
-            scalars, col, kind="cuckoo", lineage=False,
+    for df, col in ((tokens, "tokens"), (scalars, "i"), (scalars, "s")):
+        shards = build_sketch_shards(
+            df, col, kind="cuckoo", lineage=False,
             max_num_keys=1 << 16, bits_per_item=12, seed=7,
             strategy="shuffle_distinct",
-        ))
-        assert "MapInArrow" in plan and "_partition_unique" not in plan
-        assert "Generate" not in plan
-        assert plan.count("HashAggregate") >= 2 and "Exchange" in plan
+        )
+        nodes = plan_nodes(shards)
+        assert nodes.count("Exchange") == 1, nodes
+        assert nodes.count("MapInArrow") == 2, nodes
+        assert "HashAggregate" not in nodes and "Generate" not in nodes
+        plan = explain_str(shards)
+        assert "Explode" not in plan and "REPARTITION_BY_NUM" in plan
         assert ("xxhash64" in plan) == (col == "s")
 
 
