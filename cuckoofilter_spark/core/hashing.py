@@ -136,23 +136,6 @@ def mix64(keys: np.ndarray, seed: int = 0) -> np.ndarray:
     return z ^ (z >> np.uint64(31))
 
 
-def hash_bytes_to_u64(values, seed: int = 0) -> np.ndarray:
-    """Reduce arbitrary python/bytes/str values to uint64 via FNV-1a
-    then splitmix — driver-side convenience only (hot paths hash int64
-    columns vectorized)."""
-    out = np.empty(len(values), dtype=np.uint64)
-    for i, v in enumerate(values):
-        if isinstance(v, str):
-            v = v.encode("utf-8")
-        elif not isinstance(v, (bytes, bytearray)):
-            v = str(v).encode("utf-8")
-        h = 0xCBF29CE484222325
-        for b in v:
-            h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        out[i] = h
-    return mix64(out, seed)
-
-
 class SimpleTabulation:
     """Tabulation hashing over the 8 bytes of a uint64 key — XOR of
     eight 256-entry random tables (reference ``src/hashutil.h:70-90``).

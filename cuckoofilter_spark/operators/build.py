@@ -76,12 +76,17 @@ def _string_keyed(dt: DataType) -> bool:
 def hash_string_keys(c: Column, dt: DataType) -> Column:
     """The normalize stage's string step as an expression:
     ``string_key_expr`` on a string column or on every element of a
-    string array; any other column passes through unchanged."""
+    string array, NULL kept NULL (``xxhash64(NULL)`` is 42, a key);
+    any other column passes through unchanged."""
     if not _string_keyed(dt):
         return c
+
+    def key(s: Column) -> Column:
+        return F.when(s.isNotNull(), string_key_expr(s))
+
     if isinstance(dt, ArrayType):
-        return F.transform(c, string_key_expr)
-    return string_key_expr(c)
+        return F.transform(c, key)
+    return key(c)
 
 
 SHARD_SCHEMA = (

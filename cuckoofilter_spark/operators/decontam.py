@@ -134,32 +134,6 @@ def contamination_count_udf(spark, blob: bytes, *, n: int, seed: int):
     return apply
 
 
-def ngram_stats_udf(spark, blob: bytes, *, n: int, seed: int):
-    """Column-function ``f(text) -> struct<n_total int, n_hits int>``:
-    the document's distinct word-n-gram count and how many of them the
-    broadcast filter contains (same tokenize → shingle → hash → batch
-    probe pipeline as ``contamination_count_udf``, plus the free
-    total)."""
-    from cuckoofilter_spark.operators.probe import _get_filter
-
-    bc, cache_key = _broadcast_filter(spark, blob)
-    out_type = StructType([
-        StructField("n_total", IntegerType()),
-        StructField("n_hits", IntegerType()),
-    ])
-
-    @F.arrow_udf(out_type)
-    def stats(s: pa.Array) -> pa.Array:
-        lens, _, hv = _gate(s, _get_filter(bc, cache_key), n, seed)
-        return _struct(n_total=pa.array(lens.astype(np.int32)),
-                       n_hits=_per_doc(hv, lens))
-
-    def apply(col):
-        return stats(F.col(col) if isinstance(col, str) else col)
-
-    return apply
-
-
 def ngram_hit_stats_udf(spark, blob: bytes, *, n: int, seed: int):
     """Column-function ``f(text) -> struct<n_total int, n_hits int,
     hits array<long>>`` — the gate of the above-budget verify join: one

@@ -1307,17 +1307,6 @@ def dedup_near(
     return df.join(drop, id_col, "left_anti")
 
 
-def shingle_hash_rows(
-    df: DataFrame, id_col: str, text: str, *, shingle_k: int = 3,
-    seed: int = 2014,
-) -> DataFrame:
-    """(doc, sh) posting rows: one row per distinct word-k-shingle hash
-    per document — ``shingle_sets`` exploded."""
-    return shingle_sets(
-        df, id_col, text, shingle_k=shingle_k, seed=seed
-    ).select("doc", F.explode("sh").alias("sh"))
-
-
 def near_dup_pairs_ngram(
     df: DataFrame, id_col: str, text: str, *, threshold: float = 0.6,
     shingle_k: int = 3, seed: int = 2014, bucket_cap: int | None = 8192,

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from cuckoofilter_spark.operators.build import (
     bounded_collect, build_sketch_shards, collected_keys, driver_budget_rows,
@@ -114,11 +113,6 @@ def _probe_parts(fact, key, dim, dim_key, *, kind, bits_per_item, seed):
     key_col = F.col(key) if isinstance(key, str) else key
     dt = fact.select(key_col).schema[0].dataType
     hit = probe(hash_string_keys(key_col, dt))
-    if isinstance(dt, StringType):
-        # xxhash64(NULL) is its seed, not NULL: a NULL key must not hit.
-        # (Not a NULL probe input: a nullable long column reaches the
-        # pandas probe as float64 and loses the hash's low bits.)
-        hit = key_col.isNotNull() & hit
     dim_keys = dim.select(F.col(dim_key).alias("__dk")).distinct()
     return key_col, hit, dim_keys
 

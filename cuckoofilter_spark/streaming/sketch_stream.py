@@ -1,52 +1,106 @@
 """Structured Streaming sketch maintenance.
 
-Two shapes the reference library never had (strictly batch —
-SURVEY.md §2.9 streaming row) but a continuously-ingesting training
-corpus needs:
+The reference library is strictly batch (SURVEY.md §2.9 streaming
+row); a continuously ingesting training corpus needs its sketches
+kept current across micro-batches. Two shapes:
 
-1. ``run_streaming_sketch_build`` — ``foreachBatch``: each micro-batch
-   runs the SAME partial-build operator as batch mode and appends its
-   shard rows to a shard table; the global filter at any moment is the
-   tree-merge of all rows so far. Exactly-once comes from the pair
-   (streaming checkpoint, per-batch overwrite into ``batch=<id>``
-   subdirs — re-delivered batch ids overwrite idempotently, never
-   double-append).
+1. ``foreachBatch`` jobs. Each micro-batch runs the SAME operators as
+   batch mode and overwrites its own ``batch=<id>`` output dirs, so
+   exactly-once comes from the pair (streaming checkpoint, per-batch
+   overwrite): a re-delivered batch id overwrites, never appends.
+   One runner starts them all: with ``trigger_available_now=True``
+   it blocks until the stream is drained and returns None; with
+   ``False`` it returns the started ``StreamingQuery`` (10 s
+   processing-time trigger) for the caller to monitor, await or stop.
 
-2. ``streaming_distinct_by_key`` — ``applyInPandasWithState``: a
-   per-key HLL blob lives in the state store; each trigger folds new
-   keys into the state sketch and emits the running distinct estimate.
-   This is the custom-stateful-operator pattern
-   (``applyInPandasWithState``) from the build brief.
+   - ``run_streaming_sketch_build``: per-batch shard rows; the global
+     filter is the tree-merge of all rows so far.
+   - ``run_streaming_dedup`` / ``run_streaming_dedup_sliding``: exact
+     dedup against a hash-sharded cuckoo-filter table kept across
+     batches, either all history (one filter per shard;
+     ``compact_dedup_state`` folds its dirs) or a sliding horizon (one
+     pane of per-shard filters per batch, evicted by age). Both run
+     one per-batch body; only the state's lifetime differs.
+   - ``run_streaming_decontam`` / ``run_streaming_ingest``: per-batch
+     routing against static eval / corpus artifacts built once before
+     the stream starts; no cross-batch state.
+
+2. ``applyInPandasWithState`` operators: the state store holds one
+   sketch blob per state key, folded by one helper for any registry
+   kind. ``streaming_sketch_by_key`` keys by a column
+   (``streaming_distinct_by_key`` is its HLL case with an integer
+   readout), ``streaming_windowed_sketch_by_key`` by (key, event-time
+   window) with watermark finalization, and
+   ``streaming_session_sketch_by_key`` by (key, gap-separated
+   session).
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+import re
 from typing import Iterator
+from zoneinfo import ZoneInfo
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cuckoofilter_spark.core.hll import HyperLogLog
+from cuckoofilter_spark.core.cuckoo import CuckooFilter, suggest_capacity
+from cuckoofilter_spark.core.registry import (
+    SKETCH_KINDS, make_sketch, sketch_from_bytes,
+)
+from cuckoofilter_spark.operators.build import (
+    build_sketch_shards, check_add_statuses, shard_id_expr, string_key_expr,
+)
+from cuckoofilter_spark.operators.decontam import (
+    _eval_filter, ngram_overlap_udf, overlap_report,
+)
+from cuckoofilter_spark.operators.dedup import (
+    _VERIFY_BROADCAST_MAX_DOCS, crosscorpus_pairs_from_tables, dedup_exact,
+    minhash_table,
+)
+from cuckoofilter_spark.operators.grouped import (
+    _READOUTS, _VALUE_KINDS, _keys_array,
+)
+from cuckoofilter_spark.operators.text import fingerprint_md5, normalize_text
+from cuckoofilter_spark.plans.fsutil import (
+    delete_path, list_dir_names, path_exists,
+)
+
+
+def _start(stream_df: DataFrame, per_batch, checkpoint_dir: str,
+           available_now: bool) -> StreamingQuery | None:
+    """The one ``foreachBatch`` runner. availableNow: block until the
+    stream is drained and return None. Otherwise return the started
+    query (10 s trigger): a discarded handle would leave
+    ``spark.streams.active`` as the caller's only way to stop it."""
+    writer = stream_df.writeStream.foreachBatch(per_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if not available_now:
+        return writer.trigger(processingTime="10 seconds").start()
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return None
 
 
 def run_streaming_sketch_build(
     stream_df: DataFrame, column: str, *, out_dir: str, checkpoint_dir: str,
     kind: str = "cuckoo", trigger_available_now: bool = True, **params,
-) -> None:
+) -> StreamingQuery | None:
     """Maintain a sketch-shard table from a streaming source.
 
     Each micro-batch: partial build (one shard row per partition) →
     overwrite ``<out_dir>/batch=<id>/``. Readers tree-merge
     ``<out_dir>/batch=*`` whenever they need the current global
-    filter. Blocks until the stream drains (availableNow) — pass
-    ``trigger_available_now=False`` for a continuous 10s-trigger job.
+    filter. Blocks until the stream drains (availableNow) and returns
+    None; ``trigger_available_now=False`` starts a continuous
+    10s-trigger job and returns its ``StreamingQuery``.
     """
-    from cuckoofilter_spark.operators.build import build_sketch_shards
-
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         shards = build_sketch_shards(
             batch_df, column, kind=kind, lineage=False, **params
@@ -57,19 +111,31 @@ def run_streaming_sketch_build(
             os.path.join(out_dir, f"batch={batch_id}")
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
-    q.awaitTermination()
+    return _start(stream_df, per_batch, checkpoint_dir, trigger_available_now)
 
 
 STATE_SCHEMA = "sketch binary"
+# what streaming_distinct_by_key returns
 OUTPUT_SCHEMA = "key string, n_rows long, distinct_est long"
+
+
+def _sketch_fold(kind: str, where: str):
+    """The per-key operators' shared kind check: ``(readout, fold)``
+    for a registry ``kind``, with the readout of
+    ``operators/grouped._READOUTS``; ``fold(sk, values)`` adds a pandas
+    Series' non-null values to ``sk`` (as keys, or as values for
+    tdigest/kll) and raises if a membership filter refused any."""
+    if kind not in SKETCH_KINDS or kind not in _READOUTS:
+        raise ValueError(f"unknown sketch kind {kind!r}")
+    _, readout = _READOUTS[kind]
+    value_based = kind in _VALUE_KINDS
+
+    def fold(sk, values: pd.Series) -> None:
+        vals = _keys_array(values, value_based)
+        if len(vals):
+            check_add_statuses(sk.add_many(vals), f"{where}[{kind}]")
+
+    return readout, fold
 
 
 def streaming_sketch_by_key(
@@ -88,17 +154,7 @@ def streaming_sketch_by_key(
     State growth is the sketch's own bound: KBs per key regardless of
     stream length, the property that makes this run forever. Returns
     a streaming DataFrame; attach your own writeStream sink."""
-    from cuckoofilter_spark.core.registry import (
-        SKETCH_KINDS, make_sketch, sketch_from_bytes,
-    )
-    from cuckoofilter_spark.operators.grouped import (
-        _READOUTS, _VALUE_KINDS, _keys_array,
-    )
-
-    if kind not in SKETCH_KINDS or kind not in _READOUTS:
-        raise ValueError(f"unknown sketch kind {kind!r}")
-    _, readout = _READOUTS[kind]
-    value_based = kind in _VALUE_KINDS
+    readout, fold = _sketch_fold(kind, "streaming_sketch_by_key")
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -110,24 +166,12 @@ def streaming_sketch_by_key(
             sk = make_sketch(kind, **params)
         n = 0
         for pdf in pdfs:
-            vals = _keys_array(pdf[value_col].dropna(), value_based)
-            if len(vals):
-                from cuckoofilter_spark.operators.build import (
-                    check_add_statuses,
-                )
-
-                check_add_statuses(
-                    sk.add_many(vals), f"streaming_sketch_by_key[{kind}]"
-                )
+            fold(sk, pdf[value_col])
             n += len(pdf)
         state.update((sk.to_bytes(),))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_rows": [n],
-                "readout": [float(readout(sk))],
-            }
-        )
+        yield pd.DataFrame({
+            "key": [key[0]], "n_rows": [n], "readout": [float(readout(sk))],
+        })
 
     return (
         stream_df.select(
@@ -149,42 +193,15 @@ def streaming_distinct_by_key(
     """Running per-key distinct-count estimates via a stateful HLL.
 
     Returns a streaming DataFrame (key, n_rows, distinct_est) updated
-    every trigger; attach your own writeStream sink. (The HLL
-    specialization of ``streaming_sketch_by_key``, kept with its
-    original integer-readout schema.)"""
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (blob,) = state.get
-            hll = HyperLogLog.from_bytes(bytes(blob))
-        else:
-            hll = HyperLogLog(p=p, seed=seed)
-        n = 0
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.int64, na_value=0)
-            hll.add_many(vals.view(np.uint64))
-            n += len(pdf)
-        state.update((hll.to_bytes(),))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_rows": [n],
-                "distinct_est": [int(round(hll.estimate()))],
-            }
-        )
-
-    return (
-        stream_df.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(value_col).alias(value_col),
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            update, OUTPUT_SCHEMA, STATE_SCHEMA, "update",
-            GroupStateTimeout.NoTimeout,
-        )
+    every trigger; attach your own writeStream sink. The HLL case of
+    ``streaming_sketch_by_key`` with an integer readout: NULL values
+    count toward ``n_rows`` but are not keys."""
+    return streaming_sketch_by_key(
+        stream_df, key_col, value_col, kind="hll", p=p, seed=seed
+    ).select(
+        "key", "n_rows",
+        # bround rounds half to even, as Python's round() does
+        F.bround("readout").cast("long").alias("distinct_est"),
     )
 
 
@@ -192,6 +209,22 @@ STATE_SHARD_SCHEMA = (
     "shard_id int, state_batch long, num_shards int, "
     "sketch binary, n_keys long"
 )
+_STATE_DIRS = ("batch=", "snapshot=")
+
+
+def _numbered_dirs(spark, parent: str, prefixes: tuple) -> list:
+    """``(name, k)`` of each ``<prefix><k>`` child of ``parent``, for
+    any of ``prefixes``; other children are skipped. Listing goes
+    through the Hadoop FileSystem API (plans/fsutil), so the state
+    directory works on any URI the data directory works on
+    (s3a/hdfs/file), never a driver-local literal path."""
+    out = []
+    for name in list_dir_names(spark, parent):
+        for prefix in prefixes:
+            if name.startswith(prefix):
+                out.append((name, int(name[len(prefix):])))
+                break
+    return out
 
 
 def _latest_state_shards(
@@ -200,25 +233,17 @@ def _latest_state_shards(
     """Per-shard newest filter blob among state batches STRICTLY below
     ``before_batch`` — (shard_id, sketch) — or None if no state yet.
 
-    Listing goes through the Hadoop FileSystem API (plans/fsutil), so
-    the state directory works on any URI the data directory works on
-    (s3a/hdfs/file), never a driver-local literal path. Reads both
-    per-batch dirs (``batch=<k>``) and compaction snapshots
+    Reads both per-batch dirs (``batch=<k>``) and compaction snapshots
     (``snapshot=<k>``, see ``compact_dedup_state``); snapshot rows
     keep their original ``state_batch`` stamps, so the per-shard
     max_by is identical whether or not the subsumed batch dirs still
     exist — compaction and crash-mid-compaction are both invisible
     here."""
-    from cuckoofilter_spark.plans.fsutil import list_dir_names
-
-    paths = []
-    for name in list_dir_names(spark, shards_dir):
-        for prefix in ("batch=", "snapshot="):
-            if name.startswith(prefix):
-                k = int(name[len(prefix):])
-                if k < before_batch:
-                    paths.append(os.path.join(shards_dir, name))
-                break
+    paths = [
+        os.path.join(shards_dir, name)
+        for name, k in _numbered_dirs(spark, shards_dir, _STATE_DIRS)
+        if k < before_batch
+    ]
     if not paths:
         return None
     raw = spark.read.schema(STATE_SHARD_SCHEMA).parquet(*paths)
@@ -233,6 +258,24 @@ def _latest_state_shards(
         raw.groupBy("shard_id")
         .agg(F.max_by("sketch", "state_batch").alias("sketch"))
     )
+
+
+def _live_panes(
+    spark, panes_dir: str, batch_id: int, horizon_batches: int,
+) -> DataFrame | None:
+    """Delete the panes no batch >= ``batch_id`` can ever need, then
+    return (shard_id, sketch) of the live panes STRICTLY below
+    ``batch_id`` — several rows per shard — or None."""
+    live = []
+    for name, b in _numbered_dirs(spark, panes_dir, ("pane=",)):
+        if b < batch_id - horizon_batches:
+            delete_path(spark, os.path.join(panes_dir, name))
+        elif b < batch_id:  # replay: ignore our own overwritten pane
+            live.append(os.path.join(panes_dir, name))
+    if not live:
+        return None
+    return (spark.read.schema(STATE_SHARD_SCHEMA).parquet(*live)
+            .select("shard_id", "sketch"))
 
 
 def compact_dedup_state(
@@ -270,19 +313,9 @@ def compact_dedup_state(
     folding their pre-states away safe; compacting an uncommitted
     batch would feed its own fingerprints back to its replay and drop
     the whole batch. Returns the number of dirs folded in."""
-    from cuckoofilter_spark.plans.fsutil import (
-        delete_path, list_dir_names, path_exists,
-    )
-
     shards_dir = os.path.join(out_dir, "_filter", "shards")
-    old = []
-    for name in list_dir_names(spark, shards_dir):
-        for prefix in ("batch=", "snapshot="):
-            if name.startswith(prefix):
-                k = int(name[len(prefix):])
-                if k <= upto_batch:
-                    old.append(name)
-                break
+    old = [name for name, k in _numbered_dirs(spark, shards_dir, _STATE_DIRS)
+           if k <= upto_batch]
     snap_name = f"snapshot={upto_batch}"
     snap = os.path.join(shards_dir, snap_name)
     if snap_name in old:
@@ -321,12 +354,128 @@ def compact_dedup_state(
     return len(old)
 
 
+def _run_sharded_dedup(
+    stream_df: DataFrame, id_col: str, text_col: str, *, out_dir: str,
+    checkpoint_dir: str, capacity: int, bits_per_item: int, seed: int,
+    num_shards: int, trigger_available_now: bool, load_state,
+    into_prior: bool,
+) -> StreamingQuery | None:
+    """The per-batch body of both streaming dedup jobs.
+
+    ``load_state(spark, batch_id)`` returns the filter blobs a batch
+    probes — ``(shard_id, sketch)`` rows, any number per shard, ORed —
+    or None. ``into_prior`` (all history): a shard's admitted
+    fingerprints go into its one prior filter and the shard rows land
+    in ``_filter/shards/batch=<id>``. Otherwise (sliding) they go into
+    a fresh filter, and the rows land in ``_filter/panes/pane=<id>``.
+    Either way only shards that gained keys get a row, and each
+    shard's keys are inserted sorted, so the blob bytes depend on the
+    key set only."""
+    job = "run_streaming_dedup" if into_prior \
+        else "run_streaming_dedup_sliding"
+    state_out = (os.path.join(out_dir, "_filter", "shards", "batch={}")
+                 if into_prior else
+                 os.path.join(out_dir, "_filter", "panes", "pane={}"))
+    # per-shard capacity via the one sizing rule (core/cuckoo.py):
+    # binomial split imbalance + merged-load headroom, 4096 floor so
+    # early micro-batches never start in the overflow-prone regime
+    per_shard_cap = max(
+        4096, suggest_capacity(capacity, num_shards=num_shards)
+    )
+
+    def probe_group(key_pdf: pd.DataFrame,
+                    state_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(key_pdf) == 0 or len(state_pdf) == 0:  # no state: all new
+            return key_pdf[["__id"]]
+        ks = key_pdf["__fp"].to_numpy(dtype=np.int64).view(np.uint64)
+        seen = np.zeros(len(ks), dtype=bool)
+        for blob in state_pdf["sketch"]:  # OR over the shard's filters
+            seen |= sketch_from_bytes(bytes(blob)).contains_many(ks)
+            if seen.all():
+                break
+        return key_pdf.loc[~seen, ["__id"]]
+
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        state = load_state(spark, batch_id)
+        if state is not None:
+            state = state.persist()
+        batch_df = dedup_exact(batch_df, id_col, text_col)
+        fp = string_key_expr(normalize_text(text_col))
+        id_type = batch_df.schema[id_col].dataType.simpleString()
+        keys = batch_df.select(
+            F.col(id_col).alias("__id"), fp.alias("__fp"),
+            shard_id_expr(fp, num_shards).alias("shard_id"),
+        )
+
+        if state is None:
+            kept = batch_df
+        else:
+            kept_ids = (
+                keys.groupBy("shard_id")
+                .cogroup(state.groupBy("shard_id"))
+                .applyInPandas(probe_group, f"__id {id_type}")
+            )
+            kept = batch_df.join(
+                kept_ids.withColumnRenamed("__id", id_col), id_col,
+                "left_semi",
+            )
+        data_out = os.path.join(out_dir, "data", f"batch={batch_id}")
+        kept.write.mode("overwrite").parquet(data_out)
+        new_fps = (
+            spark.read.parquet(data_out).select(fp.alias("__fp")).distinct()
+            .withColumn("shard_id", shard_id_expr("__fp", num_shards))
+        )
+
+        def update_group(fp_pdf: pd.DataFrame,
+                         state_pdf: pd.DataFrame) -> pd.DataFrame:
+            if len(fp_pdf) == 0:  # untouched shard: no rewrite
+                return pd.DataFrame({
+                    "shard_id": pd.Series(dtype="int32"),
+                    "state_batch": pd.Series(dtype="int64"),
+                    "num_shards": pd.Series(dtype="int32"),
+                    "sketch": pd.Series(dtype=object),
+                    "n_keys": pd.Series(dtype="int64"),
+                })
+            if len(state_pdf):
+                sk = sketch_from_bytes(bytes(state_pdf["sketch"].iloc[0]))
+            else:
+                sk = CuckooFilter(per_shard_cap, bits_per_item, seed=seed)
+            ks = np.unique(
+                fp_pdf["__fp"].to_numpy(dtype=np.int64).view(np.uint64)
+            )
+            shard = int(fp_pdf["shard_id"].iloc[0])
+            check_add_statuses(
+                sk.add_many(ks), f"{job} shard={shard} batch={batch_id}",
+            )
+            return pd.DataFrame({
+                "shard_id": [shard],
+                "state_batch": [int(batch_id)],
+                "num_shards": [int(num_shards)],
+                "sketch": [sk.to_bytes()],
+                "n_keys": [int(sk.size)],
+            })
+
+        prior = state if into_prior and state is not None else \
+            spark.createDataFrame([], "shard_id int, sketch binary")
+        (
+            new_fps.groupBy("shard_id")
+            .cogroup(prior.groupBy("shard_id"))
+            .applyInPandas(update_group, STATE_SHARD_SCHEMA)
+            .write.mode("overwrite").parquet(state_out.format(batch_id))
+        )
+        if state is not None:
+            state.unpersist()
+
+    return _start(stream_df, per_batch, checkpoint_dir, trigger_available_now)
+
+
 def run_streaming_dedup(
     stream_df: DataFrame, id_col: str, text_col: str, *, out_dir: str,
     checkpoint_dir: str, capacity: int, bits_per_item: int = 16,
     seed: int = 2014, num_shards: int = 32,
     trigger_available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Streaming exact dedup: drop rows whose normalized-text
     fingerprint appeared in ANY earlier batch (cross-batch memory = a
     hash-sharded cuckoo-filter table), keeping the min-id row for
@@ -359,135 +508,20 @@ def run_streaming_dedup(
     (≈2·4/2^f; ~1e-4 at f=16). Size ``capacity`` for the total corpus
     — an overfull shard refuses inserts loudly (add statuses checked)
     rather than degrade into false negatives.
+
+    Blocks until the stream drains (availableNow) and returns None;
+    ``trigger_available_now=False`` returns the started
+    ``StreamingQuery``.
     """
-    import numpy as _np
-
-    from cuckoofilter_spark.core.cuckoo import CuckooFilter
-    from cuckoofilter_spark.core.registry import sketch_from_bytes
-    from cuckoofilter_spark.operators.build import (
-        check_add_statuses, shard_id_expr, string_key_expr,
-    )
-    from cuckoofilter_spark.operators.dedup import dedup_exact
-    from cuckoofilter_spark.operators.text import normalize_text
-
     shards_dir = os.path.join(out_dir, "_filter", "shards")
-    # per-shard capacity via the one sizing rule (core/cuckoo.py):
-    # binomial split imbalance + merged-load headroom, 4096 floor so
-    # early micro-batches never start in the overflow-prone regime
-    from cuckoofilter_spark.core.cuckoo import suggest_capacity
-
-    per_shard_cap = max(
-        4096, suggest_capacity(capacity, num_shards=num_shards)
+    return _run_sharded_dedup(
+        stream_df, id_col, text_col, out_dir=out_dir,
+        checkpoint_dir=checkpoint_dir, capacity=capacity,
+        bits_per_item=bits_per_item, seed=seed, num_shards=num_shards,
+        trigger_available_now=trigger_available_now, into_prior=True,
+        load_state=lambda spark, b: _latest_state_shards(
+            spark, shards_dir, b, num_shards),
     )
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        state = _latest_state_shards(
-            spark, shards_dir, batch_id, num_shards
-        )
-        if state is not None:
-            state = state.persist()
-        batch_df = dedup_exact(batch_df, id_col, text_col)
-        fp = string_key_expr(normalize_text(text_col))
-        id_type = batch_df.schema[id_col].dataType.simpleString()
-        keys = batch_df.select(
-            F.col(id_col).alias("__id"), fp.alias("__fp"),
-            shard_id_expr(fp, num_shards).alias("shard_id"),
-        )
-
-        if state is None:
-            kept = batch_df
-        else:
-            def probe_group(key_pdf: pd.DataFrame,
-                            state_pdf: pd.DataFrame) -> pd.DataFrame:
-                if len(key_pdf) == 0:
-                    return key_pdf[["__id"]]
-                if len(state_pdf) == 0:  # shard never touched: all new
-                    return key_pdf[["__id"]]
-                sk = sketch_from_bytes(bytes(state_pdf["sketch"].iloc[0]))
-                ks = key_pdf["__fp"].to_numpy(
-                    dtype=np.int64).view(np.uint64)
-                return key_pdf.loc[~sk.contains_many(ks), ["__id"]]
-
-            kept_ids = (
-                keys.groupBy("shard_id")
-                .cogroup(state.groupBy("shard_id"))
-                .applyInPandas(probe_group, f"__id {id_type}")
-            )
-            kept = batch_df.join(
-                kept_ids.withColumnRenamed("__id", id_col), id_col,
-                "left_semi",
-            )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "data", f"batch={batch_id}")
-        )
-        kept_back = spark.read.parquet(
-            os.path.join(out_dir, "data", f"batch={batch_id}")
-        )
-        new_fps = kept_back.select(fp.alias("__fp")).distinct().select(
-            "__fp", shard_id_expr("__fp", num_shards).alias("shard_id")
-        )
-
-        def update_group(fp_pdf: pd.DataFrame,
-                         state_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(fp_pdf) == 0:  # untouched shard: no rewrite
-                return pd.DataFrame(
-                    {
-                        "shard_id": pd.Series(dtype="int32"),
-                        "state_batch": pd.Series(dtype="int64"),
-                        "num_shards": pd.Series(dtype="int32"),
-                        "sketch": pd.Series(dtype=object),
-                        "n_keys": pd.Series(dtype="int64"),
-                    }
-                )
-            if len(state_pdf):
-                sk = sketch_from_bytes(bytes(state_pdf["sketch"].iloc[0]))
-            else:
-                sk = CuckooFilter(
-                    per_shard_cap, bits_per_item, seed=seed
-                )
-            ks = _np.unique(
-                fp_pdf["__fp"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            shard = int(fp_pdf["shard_id"].iloc[0])
-            check_add_statuses(
-                sk.add_many(ks),
-                f"run_streaming_dedup shard={shard} batch={batch_id}",
-            )
-            return pd.DataFrame(
-                {
-                    "shard_id": [shard],
-                    "state_batch": [int(batch_id)],
-                    "num_shards": [int(num_shards)],
-                    "sketch": [sk.to_bytes()],
-                    "n_keys": [int(sk.size)],
-                }
-            )
-
-        empty_state = spark.createDataFrame(
-            [], "shard_id int, sketch binary"
-        )
-        updated = (
-            new_fps.groupBy("shard_id")
-            .cogroup((state if state is not None else empty_state)
-                     .groupBy("shard_id"))
-            .applyInPandas(update_group, STATE_SHARD_SCHEMA)
-        )
-        updated.write.mode("overwrite").parquet(
-            os.path.join(shards_dir, f"batch={batch_id}")
-        )
-        if state is not None:
-            state.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
-    q.awaitTermination()
 
 
 def run_streaming_dedup_sliding(
@@ -495,7 +529,7 @@ def run_streaming_dedup_sliding(
     checkpoint_dir: str, capacity: int, horizon_batches: int,
     bits_per_item: int = 16, seed: int = 2014, num_shards: int = 32,
     trigger_available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Streaming dedup against a SLIDING horizon: drop rows whose
     normalized-text fingerprint was ADMITTED in any of the last
     ``horizon_batches`` micro-batches — recency-bounded novelty
@@ -521,139 +555,22 @@ def run_streaming_dedup_sliding(
 
     Same exactness caveat as the all-history job: filter FPR
     (~2·4/2^f) can wrongly drop a novel row; zero false negatives
-    means a true duplicate inside the horizon is never admitted."""
-    import numpy as _np
-
-    from cuckoofilter_spark.core.cuckoo import CuckooFilter, suggest_capacity
-    from cuckoofilter_spark.core.registry import sketch_from_bytes
-    from cuckoofilter_spark.operators.build import (
-        check_add_statuses, shard_id_expr, string_key_expr,
-    )
-    from cuckoofilter_spark.operators.dedup import dedup_exact
-    from cuckoofilter_spark.operators.text import normalize_text
-    from cuckoofilter_spark.plans.fsutil import (
-        delete_path, list_dir_names,
-    )
-
+    means a true duplicate inside the horizon is never admitted.
+    Same return value too: None after draining (availableNow), the
+    started ``StreamingQuery`` in continuous mode."""
     if horizon_batches < 1:
         raise ValueError(
             f"horizon_batches must be >= 1, got {horizon_batches}"
         )
     panes_dir = os.path.join(out_dir, "_filter", "panes")
-    per_shard_cap = max(
-        4096, suggest_capacity(capacity, num_shards=num_shards)
+    return _run_sharded_dedup(
+        stream_df, id_col, text_col, out_dir=out_dir,
+        checkpoint_dir=checkpoint_dir, capacity=capacity,
+        bits_per_item=bits_per_item, seed=seed, num_shards=num_shards,
+        trigger_available_now=trigger_available_now, into_prior=False,
+        load_state=lambda spark, b: _live_panes(
+            spark, panes_dir, b, horizon_batches),
     )
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # evict panes that no batch >= batch_id can ever need
-        live_lo = batch_id - horizon_batches
-        live = []
-        for name in list_dir_names(spark, panes_dir):
-            if not name.startswith("pane="):
-                continue
-            b = int(name[len("pane="):])
-            if b < live_lo:
-                delete_path(spark, os.path.join(panes_dir, name))
-            elif b < batch_id:  # replay: ignore our own overwritten pane
-                live.append(os.path.join(panes_dir, name))
-        state = (
-            spark.read.schema(STATE_SHARD_SCHEMA).parquet(*live)
-            .select("shard_id", "sketch").persist()
-            if live else None
-        )
-
-        batch_df = dedup_exact(batch_df, id_col, text_col)
-        fp = string_key_expr(normalize_text(text_col))
-        id_type = batch_df.schema[id_col].dataType.simpleString()
-        keys = batch_df.select(
-            F.col(id_col).alias("__id"), fp.alias("__fp"),
-            shard_id_expr(fp, num_shards).alias("shard_id"),
-        )
-
-        if state is None:
-            kept = batch_df
-        else:
-            def probe_group(key_pdf: pd.DataFrame,
-                            state_pdf: pd.DataFrame) -> pd.DataFrame:
-                if len(key_pdf) == 0:
-                    return key_pdf[["__id"]]
-                if len(state_pdf) == 0:
-                    return key_pdf[["__id"]]
-                ks = key_pdf["__fp"].to_numpy(
-                    dtype=np.int64).view(np.uint64)
-                seen = np.zeros(len(ks), dtype=bool)
-                for blob in state_pdf["sketch"]:  # OR over live panes
-                    sk = sketch_from_bytes(bytes(blob))
-                    seen |= sk.contains_many(ks)
-                    if seen.all():
-                        break
-                return key_pdf.loc[~seen, ["__id"]]
-
-            kept_ids = (
-                keys.groupBy("shard_id")
-                .cogroup(state.groupBy("shard_id"))
-                .applyInPandas(probe_group, f"__id {id_type}")
-            )
-            kept = batch_df.join(
-                kept_ids.withColumnRenamed("__id", id_col), id_col,
-                "left_semi",
-            )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "data", f"batch={batch_id}")
-        )
-        kept_back = spark.read.parquet(
-            os.path.join(out_dir, "data", f"batch={batch_id}")
-        )
-        new_fps = kept_back.select(fp.alias("__fp")).distinct().select(
-            "__fp", shard_id_expr("__fp", num_shards).alias("shard_id")
-        )
-
-        def build_pane(fp_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(fp_pdf) == 0:
-                return pd.DataFrame({
-                    "shard_id": pd.Series(dtype="int32"),
-                    "state_batch": pd.Series(dtype="int64"),
-                    "num_shards": pd.Series(dtype="int32"),
-                    "sketch": pd.Series(dtype=object),
-                    "n_keys": pd.Series(dtype="int64"),
-                })
-            sk = CuckooFilter(per_shard_cap, bits_per_item, seed=seed)
-            ks = _np.unique(
-                fp_pdf["__fp"].to_numpy(dtype=np.int64).view(np.uint64)
-            )
-            shard = int(fp_pdf["shard_id"].iloc[0])
-            check_add_statuses(
-                sk.add_many(ks),
-                f"run_streaming_dedup_sliding shard={shard} "
-                f"batch={batch_id}",
-            )
-            return pd.DataFrame({
-                "shard_id": [shard],
-                "state_batch": [int(batch_id)],
-                "num_shards": [int(num_shards)],
-                "sketch": [sk.to_bytes()],
-                "n_keys": [int(sk.size)],
-            })
-
-        (
-            new_fps.groupBy("shard_id")
-            .applyInPandas(build_pane, STATE_SHARD_SCHEMA)
-            .write.mode("overwrite")
-            .parquet(os.path.join(panes_dir, f"pane={batch_id}"))
-        )
-        if state is not None:
-            state.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
-    q.awaitTermination()
 
 
 def run_streaming_decontam(
@@ -661,7 +578,7 @@ def run_streaming_decontam(
     *, out_dir: str, checkpoint_dir: str, n: int = 3,
     min_overlap: int = 1, bits_per_item: int = 16, seed: int = 7,
     trigger_available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Streaming benchmark decontamination: route each micro-batch's
     documents into ``clean/batch=<id>`` or ``flagged/batch=<id>``
     (flagged rows carry ``n_overlap``) against a STATIC eval set.
@@ -678,11 +595,9 @@ def run_streaming_decontam(
     idempotent, same as the other streaming jobs here. State never
     grows: unlike streaming dedup there is NO cross-batch mutable
     state, so this scales to any stream length as one narrow probe
-    pass (+ a candidates-only verify join above the cap) per batch."""
-    from cuckoofilter_spark.operators.decontam import (
-        _eval_filter, ngram_overlap_udf, overlap_report,
-    )
-
+    pass (+ a candidates-only verify join above the cap) per batch.
+    Returns None after draining (availableNow), the started
+    ``StreamingQuery`` in continuous mode."""
     blob, keys, ev_ngrams = _eval_filter(
         eval_df, text_col, n=n, bits_per_item=bits_per_item, seed=seed
     )
@@ -704,25 +619,16 @@ def run_streaming_decontam(
             batch_df, blob, ev, id_col, text_col,
             n=n, min_overlap=min_overlap, seed=seed, hits_udf=hits,
         )
-        flagged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"flagged/batch={batch_id}")
-        )
-        flagged_ids = spark.read.parquet(
-            os.path.join(out_dir, f"flagged/batch={batch_id}")
-        ).select(id_col)
+        flagged_out = os.path.join(out_dir, f"flagged/batch={batch_id}")
+        flagged.write.mode("overwrite").parquet(flagged_out)
+        flagged_ids = spark.read.parquet(flagged_out).select(id_col)
         clean = batch_df.join(flagged_ids, id_col, "left_anti")
         clean.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"clean/batch={batch_id}")
         )
         batch_df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(per_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer.trigger(availableNow=True).start().awaitTermination()
-    else:
-        writer.trigger(processingTime="10 seconds").start()
+    return _start(stream_df, per_batch, checkpoint_dir, trigger_available_now)
 
 
 def streaming_windowed_sketch_by_key(
@@ -755,19 +661,7 @@ def streaming_windowed_sketch_by_key(
 
     Returns a streaming DataFrame
     ``(key, window_start, n_rows, readout, final)``."""
-    from pyspark.sql.types import TimestampType
-
-    from cuckoofilter_spark.core.registry import (
-        SKETCH_KINDS, make_sketch, sketch_from_bytes,
-    )
-    from cuckoofilter_spark.operators.grouped import (
-        _READOUTS, _VALUE_KINDS, _keys_array,
-    )
-
-    if kind not in SKETCH_KINDS or kind not in _READOUTS:
-        raise ValueError(f"unknown sketch kind {kind!r}")
-    _, readout = _READOUTS[kind]
-    value_based = kind in _VALUE_KINDS
+    readout, fold = _sketch_fold(kind, "streaming_windowed_sketch_by_key")
 
     # The grouped-state key's window_start arrives as a tz-NAIVE
     # datetime rendered in spark.sql.session.timeZone, while
@@ -786,54 +680,36 @@ def streaming_windowed_sketch_by_key(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         k, wstart = key
-        if state.hasTimedOut:
-            (blob, n_seen) = state.get
-            sk = sketch_from_bytes(bytes(blob))
-            state.remove()
-            yield pd.DataFrame({
-                "key": [k], "window_start": [wstart],
-                "n_rows": [int(n_seen)],
-                "readout": [float(readout(sk))], "final": [True],
-            })
-            return
         if state.exists:
             (blob, n_seen) = state.get
-            sk = sketch_from_bytes(bytes(blob))
-            n_seen = int(n_seen)
+            sk, n_seen = sketch_from_bytes(bytes(blob)), int(n_seen)
         else:
-            sk = make_sketch(kind, **params)
-            n_seen = 0
-        n = 0
-        for pdf in pdfs:
-            vals = _keys_array(pdf[value_col].dropna(), value_based)
-            if len(vals):
-                from cuckoofilter_spark.operators.build import (
-                    check_add_statuses,
-                )
-
-                check_add_statuses(
-                    sk.add_many(vals),
-                    f"streaming_windowed_sketch_by_key[{kind}]",
-                )
-            n += len(pdf)
-        n_seen += n
-        state.update((sk.to_bytes(), n_seen))
-        # finalize when the WATERMARK (not wall clock) passes the
-        # window's close; the timeout timestamp is event-time ms.
-        # Clamped to just past the current watermark: a window that
-        # already closed (its rows arrived late-but-within-watermark,
-        # or availableNow raced the watermark ahead) must finalize on
-        # the NEXT trigger, and Spark rejects timeouts in the past.
-        close = (wstart + _window_delta(window)).replace(tzinfo=session_tz)
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(
-            max(int(close.timestamp() * 1000), wm + 1)
-        )
-        if emit_updates:
+            sk, n_seen = make_sketch(kind, **params), 0
+        final = state.hasTimedOut
+        if final:  # the watermark passed the window's close
+            state.remove()
+        else:
+            for pdf in pdfs:
+                fold(sk, pdf[value_col])
+                n_seen += len(pdf)
+            state.update((sk.to_bytes(), n_seen))
+            # finalize when the WATERMARK (not wall clock) passes the
+            # window's close; the timeout timestamp is event-time ms.
+            # Clamped to just past the current watermark: a window that
+            # already closed (its rows arrived late-but-within-
+            # watermark, or availableNow raced the watermark ahead)
+            # must finalize on the NEXT trigger, and Spark rejects
+            # timeouts in the past.
+            close = (wstart + _window_delta(window)).replace(
+                tzinfo=session_tz)
+            wm = state.getCurrentWatermarkMs()
+            state.setTimeoutTimestamp(
+                max(int(close.timestamp() * 1000), wm + 1)
+            )
+        if final or emit_updates:
             yield pd.DataFrame({
-                "key": [k], "window_start": [wstart],
-                "n_rows": [n_seen],
-                "readout": [float(readout(sk))], "final": [False],
+                "key": [k], "window_start": [wstart], "n_rows": [n_seen],
+                "readout": [float(readout(sk))], "final": [final],
             })
 
     out_schema = ("key string, window_start timestamp, n_rows long, "
@@ -913,23 +789,10 @@ def streaming_session_sketch_by_key(
     DataFrame ``(key, session_start, session_end, n_rows, readout,
     final)``; ``emit_updates`` adds a running row per open session
     per trigger."""
-    from cuckoofilter_spark.core.registry import (
-        SKETCH_KINDS, make_sketch, sketch_from_bytes,
-    )
-    from cuckoofilter_spark.operators.grouped import (
-        _READOUTS, _VALUE_KINDS, _keys_array,
-    )
-
-    if kind not in SKETCH_KINDS or kind not in _READOUTS:
-        raise ValueError(f"unknown sketch kind {kind!r}")
-    _, readout = _READOUTS[kind]
-    value_based = kind in _VALUE_KINDS
+    readout, fold = _sketch_fold(kind, "streaming_session_sketch_by_key")
     gap_ms = int(_window_delta(gap).total_seconds() * 1000)
     if gap_ms <= 0:
         raise ValueError(f"gap must be positive, got {gap!r}")
-
-    def _merge_spans(spans: list) -> list:
-        return _merge_session_spans(spans, gap_ms)
 
     def _rows(key, spans, final):
         return pd.DataFrame({
@@ -965,16 +828,7 @@ def streaming_session_sketch_by_key(
                 for hi in list(cuts) + [len(ts)]:
                     seg = pdf.iloc[lo:hi]
                     sk = make_sketch(kind, **params)
-                    vals = _keys_array(seg[value_col].dropna(), value_based)
-                    if len(vals):
-                        from cuckoofilter_spark.operators.build import (
-                            check_add_statuses,
-                        )
-
-                        check_add_statuses(
-                            sk.add_many(vals),
-                            f"streaming_session_sketch_by_key[{kind}]",
-                        )
+                    fold(sk, seg[value_col])
                     spans.append(
                         (int(ts[lo]), int(ts[hi - 1]), sk, hi - lo)
                     )
@@ -983,7 +837,7 @@ def streaming_session_sketch_by_key(
             if state.exists:
                 state.remove()
             return
-        spans = _merge_spans(spans)
+        spans = _merge_session_spans(spans, gap_ms)
         wm = state.getCurrentWatermarkMs()
         # STRICT close test: Spark still admits events with ts ==
         # watermark, so a session is immutable only once end + gap < wm
@@ -1051,32 +905,25 @@ def _session_tzinfo(tz_name: str):
     """Resolve a Spark session-timezone string to a tzinfo: region ids
     ('UTC', 'America/Los_Angeles') via zoneinfo, Spark's accepted
     offset forms ('+08:00', '-0530', 'GMT+8') as fixed offsets."""
-    import datetime as _dt
-    import re as _re
-
-    m = _re.fullmatch(
+    m = re.fullmatch(
         r"(?:GMT|UTC)?(?P<sign>[+-])(?P<h>\d{1,2}):?(?P<m>\d{2})?",
         tz_name.strip(),
     )
     if m:
         sign = 1 if m.group("sign") == "+" else -1
-        delta = _dt.timedelta(
+        delta = datetime.timedelta(
             hours=int(m.group("h")), minutes=int(m.group("m") or 0)
         )
-        return _dt.timezone(sign * delta)
-    from zoneinfo import ZoneInfo
-
+        return datetime.timezone(sign * delta)
     return ZoneInfo(tz_name.strip())
 
 
 def _window_delta(window: str):
     """'1 hour' / '30 minutes' / '10 seconds' -> timedelta."""
-    import datetime as _dt
-
     qty, unit = window.strip().split()
     key = {"second": "seconds", "minute": "minutes",
            "hour": "hours", "day": "days"}[unit.rstrip("s")]
-    return _dt.timedelta(**{key: int(qty)})
+    return datetime.timedelta(**{key: int(qty)})
 
 
 def run_streaming_ingest(
@@ -1085,7 +932,7 @@ def run_streaming_ingest(
     threshold: float = 0.8, shingle_k: int = 3, seed: int = 2014,
     num_hashes: int = 128, bands: int = 32, rows_per_band: int = 4,
     bucket_cap: int | None = 8192, trigger_available_now: bool = True,
-):
+) -> StreamingQuery | None:
     """Continuous incremental ingest (round 7): each micro-batch of
     newly crawled documents is deduplicated against a STATIC existing
     corpus — exact first (md5-fingerprint anti-join), then MinHash
@@ -1107,13 +954,9 @@ def run_streaming_ingest(
 
     The verify join broadcasts the BATCH side only when it is small
     enough; the corpus sets table always stays shuffle-side — the
-    polarity that survives a corpus that can never be broadcast."""
-    from cuckoofilter_spark.operators.dedup import (
-        _VERIFY_BROADCAST_MAX_DOCS, crosscorpus_pairs_from_tables,
-        minhash_table,
-    )
-    from cuckoofilter_spark.operators.text import fingerprint_md5
-
+    polarity that survives a corpus that can never be broadcast.
+    Returns None after draining (availableNow), the started
+    ``StreamingQuery`` in continuous mode."""
     mh_kw = dict(
         num_hashes=num_hashes, bands=bands, rows_per_band=rows_per_band,
         shingle_k=shingle_k, seed=seed,
@@ -1159,13 +1002,4 @@ def run_streaming_ingest(
         surv.unpersist()
         batch_df.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(per_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer.trigger(availableNow=True).start().awaitTermination()
-        return None
-    # continuous mode: hand the StreamingQuery back so the caller can
-    # monitor/stop/await it (round-7 review finding — a discarded
-    # handle leaves spark.streams.active as the only control path)
-    return writer.trigger(processingTime="10 seconds").start()
+    return _start(stream_df, per_batch, checkpoint_dir, trigger_available_now)

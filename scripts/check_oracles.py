@@ -1,19 +1,28 @@
-"""Local replica of the driver's correctness gate: run every
-``queries()`` entry at sf0.01 and diff against ``oracle_sql()`` via
-DuckDB (row count, sorted-column value comparison)."""
+"""Local replica of the correctness gate: run every ``queries()``
+entry at sf0.01 and diff against ``oracle_sql()`` via DuckDB (row
+count, sorted-column value comparison).
+
+    python scripts/check_oracles.py [SF_DIR [NAME_PREFIX]]
+
+A second argument runs only the queries whose name starts with it,
+e.g. ``streaming_`` for the streaming jobs."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 from cuckoofilter_spark.session import get_spark  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+PREFIX = sys.argv[2] if len(sys.argv) > 2 else ""
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -28,7 +37,9 @@ def main() -> int:
             f"read_parquet('{SF_DIR}/{t}.parquet')"
         )
     spark = get_spark(cores=8)
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    qs = {k: v for k, v in entry_mod.queries().items()
+          if k.startswith(PREFIX)}
+    oracles = entry_mod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         t0 = time.time()

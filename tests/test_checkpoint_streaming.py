@@ -1328,3 +1328,247 @@ def test_streaming_windowed_sketch_finalizes_on_watermark(spark, tmp_path):
     # B's window is still open: updates only, no final
     b_rows = [r for _, r in rows if r["key"] == "B"]
     assert b_rows and not any(r["final"] for r in b_rows)
+
+
+def test_streaming_distinct_by_key_skips_null_values(spark, tmp_path):
+    """A NULL value is not a key: {1, 2, 3, NULL} holds 3 distinct
+    values and {5, NULL} holds 1, while n_rows still counts every row
+    of the key. The schema stays (key, n_rows, distinct_est)."""
+    from cuckoofilter_spark.streaming.sketch_stream import (
+        streaming_distinct_by_key,
+    )
+
+    schema = "k string, v long"
+    src = str(tmp_path / "nv_src")
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), ("a", 3), ("a", None), ("b", 5), ("b", None)],
+        schema,
+    ).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        streaming_distinct_by_key(stream, "k", "v")
+        .writeStream.format("memory").queryName("nv_dist")
+        .outputMode("update").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    out = spark.sql("SELECT * FROM nv_dist")
+    assert out.schema.simpleString() == \
+        "struct<key:string,n_rows:bigint,distinct_est:bigint>"
+    got = {r["key"]: (r["n_rows"], r["distinct_est"])
+           for r in out.collect()}
+    assert got == {"a": (4, 3), "b": (2, 1)}
+
+
+def _digest_batches() -> list:
+    """Four micro-batches of 16 docs over a 40-phrase pool: duplicates
+    inside a batch and across batches, every shard of 4 touched."""
+    rng = np.random.default_rng(5)
+    return [
+        [(100 * b + i, f"Phrase {int(rng.integers(0, 40))}  of the stream")
+         for i in range(16)]
+        for b in range(4)
+    ]
+
+
+def _state_digests(spark, out: str) -> dict:
+    """Every filter blob under ``<out>/_filter`` as ``dir -> sorted
+    [shard_id, state_batch, n_keys, sha256(sketch)]``, plus the
+    surviving ids of every ``data/batch=<id>``."""
+    import hashlib
+
+    from cuckoofilter_spark.plans.fsutil import list_dir_names
+
+    got = {}
+    for sub in ("shards", "panes"):
+        base = f"{out}/_filter/{sub}"
+        for name in sorted(list_dir_names(spark, base)):
+            got[f"{sub}/{name}"] = sorted(
+                [r["shard_id"], r["state_batch"], r["n_keys"],
+                 hashlib.sha256(bytes(r["sketch"])).hexdigest()]
+                for r in spark.read.parquet(f"{base}/{name}").collect()
+            )
+    for name in sorted(list_dir_names(spark, f"{out}/data")):
+        got[f"data/{name}"] = sorted(
+            r["doc_id"] for r in
+            spark.read.parquet(f"{out}/data/{name}").collect()
+        )
+    return got
+
+
+@pytest.fixture(scope="module")
+def dedup_runs(spark, tmp_path_factory):
+    """The digest stream fed one file (= one micro-batch) at a time to
+    the all-history job (compacted after batch 1), the sliding job at
+    horizon 2, and the sliding job at a horizon wider than the
+    stream."""
+    from cuckoofilter_spark.streaming.sketch_stream import (
+        compact_dedup_state, run_streaming_dedup, run_streaming_dedup_sliding,
+    )
+
+    root = tmp_path_factory.mktemp("digest")
+    schema = "doc_id long, text string"
+    src = root / "src"
+    src.mkdir()
+    jobs = {
+        "all": (run_streaming_dedup, {}),
+        "sliding": (run_streaming_dedup_sliding, {"horizon_batches": 2}),
+        "wide": (run_streaming_dedup_sliding, {"horizon_batches": 10}),
+    }
+    for b, rows in enumerate(_digest_batches()):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.parquet(str(src), mode="append")
+        for name, (job, kw) in jobs.items():
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1).parquet(str(src))
+            )
+            job(stream, "doc_id", "text", out_dir=str(root / name),
+                checkpoint_dir=str(root / f"{name}_ckpt"), capacity=2_000,
+                seed=11, num_shards=4, **kw)
+        if b == 1:
+            assert compact_dedup_state(spark, str(root / "all"),
+                                       upto_batch=1) == 2
+    return {name: _state_digests(spark, str(root / name)) for name in jobs}
+
+
+def test_streaming_dedup_sliding_wide_horizon_matches_all_history(
+    dedup_runs,
+):
+    """A horizon wider than the stream never evicts, so the sliding
+    job keeps exactly the all-history job's ids, batch by batch."""
+    def kept(name):
+        return {k: v for k, v in dedup_runs[name].items()
+                if k.startswith("data/")}
+
+    assert len(kept("all")) == 4
+    assert kept("wide") == kept("all")
+
+
+_PINNED_STATE = {
+    "all": {
+        "data/batch=0": [0, 1, 2, 4, 5, 6, 7, 8, 9, 11, 12, 13, 14, 15],
+        "data/batch=1": [104, 106, 107, 109, 110, 111, 113, 114, 115],
+        "data/batch=2": [200, 203, 205, 210, 212],
+        "data/batch=3": [303, 304, 306, 310, 313],
+        "shards/batch=2": [
+            [0, 2, 6, "2e1c1934ddd8be425decd7f3fd7a320a"
+                      "65a8377689e2750ce8fdece9663e0d6f"],
+            [1, 2, 7, "1d297b16e181d33e7e10f5fe1d966a7d"
+                      "f22001803eb3b31c215a9ee4bfeef47a"],
+            [3, 2, 7, "dd8d85ca8376eac6f6a4a6a1727b0b45"
+                      "d78d1ffd28b8dd10473103e8d18777b5"],
+        ],
+        "shards/batch=3": [
+            [1, 3, 11, "af312814fc34d62f078f1bbdc429e11b"
+                       "95149a7b063f6733a0131fa3ea090f70"],
+            [2, 3, 9, "cb3b2de371b86a9c936c1c7fb4ba1fa3"
+                      "dff0eb0e330cfa387aaae72bb96929d7"],
+        ],
+        "shards/snapshot=1": [
+            [0, 1, 4, "7d4fd063c7d10753a7a472784ea39095"
+                      "4985ff5239f4f2e9c5fc14f39b816aa2"],
+            [1, 1, 5, "155989d494b0cb74cc63f20237223f24"
+                      "06950dc5b78ec6d95293210fe187d342"],
+            [2, 1, 8, "da0ceb0c72f6175318fb001190c1f3c3"
+                      "36e7667e5fb83975537641b1830bd684"],
+            [3, 1, 6, "07c0368a1e2f2eee4f916a9b3da4ff44"
+                      "97b4c81efd5ee4b238e8a59ebb44a213"],
+        ],
+    },
+    "sliding": {
+        "data/batch=0": [0, 1, 2, 4, 5, 6, 7, 8, 9, 11, 12, 13, 14, 15],
+        "data/batch=1": [104, 106, 107, 109, 110, 111, 113, 114, 115],
+        "data/batch=2": [200, 203, 205, 210, 212],
+        "data/batch=3": [303, 304, 306, 310, 311, 313],
+        "panes/pane=1": [
+            [0, 1, 1, "ebca5a69d611674d1f0535f7b17708ff"
+                      "c590a0ca77cae2c522aba3aa37de9f53"],
+            [1, 1, 3, "bb1abd939b67efe0a4c7640b08755d8f"
+                      "51d121fbe9f1262338a7f09a5580db38"],
+            [2, 1, 4, "6a92ca35d2cd7bd2dbaaa96f56f13935"
+                      "8a68ebc7e998c4db8f6f6446a392849c"],
+            [3, 1, 1, "69d07a79e2e2bc6a8dee3547447c56dd"
+                      "deeb1faa18eda46e6956bd7fa5e1a7d7"],
+        ],
+        "panes/pane=2": [
+            [0, 2, 2, "3a1b2cd55aa2de3ebde6b4797a190e69"
+                      "94e4163c64bedaa2627bdc4054f92f8d"],
+            [1, 2, 2, "a15898ce039be25fd2dbdfbfe1239e2d"
+                      "cef4649a251b416e626f45f1cce14432"],
+            [3, 2, 1, "7465517e10460f5f9e8cd8abf8e27543"
+                      "7a2558059a08d75b7c290cb7eb84ff79"],
+        ],
+        "panes/pane=3": [
+            [1, 3, 4, "43554b15079e3f97c097b3afacb895e9"
+                      "b6bcf3d016dbb40b4382f7adb86e6e28"],
+            [2, 3, 1, "6d2760d5427d44150e2ca387fc254a6a"
+                      "0be991a064f0ed85d0723c04f0796a0b"],
+            [3, 3, 1, "0aa9bb30707ebaa43e7f83c2998b9ca4"
+                      "057275d8683a72ba75902350894b69f3"],
+        ],
+    },
+}
+
+
+def test_streaming_dedup_state_bytes_pinned(dedup_runs):
+    """Shard blobs (a compaction snapshot included), pane blobs and
+    survivors are byte-identical to the recorded run: a state dir
+    written by an earlier version resumes unchanged."""
+    got = {k: v for k, v in dedup_runs.items() if k != "wide"}
+    assert got == _PINNED_STATE
+
+
+def _continuous_job(job: str, stream, static, out: str, ckpt: str):
+    from cuckoofilter_spark.streaming import sketch_stream as ss
+
+    kw = dict(out_dir=out, checkpoint_dir=ckpt, trigger_available_now=False)
+    if job == "sketch_build":
+        return ss.run_streaming_sketch_build(stream, "doc_id", **kw, **PARAMS)
+    if job == "dedup":
+        return ss.run_streaming_dedup(stream, "doc_id", "text",
+                                      capacity=1_000, num_shards=4, **kw)
+    if job == "dedup_sliding":
+        return ss.run_streaming_dedup_sliding(
+            stream, "doc_id", "text", capacity=1_000, num_shards=4,
+            horizon_batches=2, **kw)
+    if job == "decontam":
+        return ss.run_streaming_decontam(stream, static, "doc_id", "text",
+                                         n=3, **kw)
+    return ss.run_streaming_ingest(stream, static, "doc_id", "text",
+                                   num_hashes=16, bands=4, rows_per_band=4,
+                                   **kw)
+
+
+@pytest.mark.parametrize("job,first_batch", [
+    ("sketch_build", "batch=0"),
+    ("dedup", "data/batch=0"),
+    ("dedup_sliding", "data/batch=0"),
+    ("decontam", "clean/batch=0"),
+    ("ingest", "kept/batch=0"),
+])
+def test_streaming_job_continuous_mode_returns_query(
+    spark, tmp_path, job, first_batch,
+):
+    """With ``trigger_available_now=False`` every foreachBatch job
+    returns its started StreamingQuery at once: the caller drives it
+    with ``processAllAvailable()`` and ends it with ``stop()``."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    schema = "doc_id long, text string"
+    rows = [(i, f"word{i % 7} shared body text number {i % 5}")
+            for i in range(40)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(2).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    static = spark.createDataFrame(rows[:6], schema)
+    out = str(tmp_path / "out")
+    q = _continuous_job(job, stream, static, out, str(tmp_path / "ckpt"))
+    try:
+        assert isinstance(q, StreamingQuery)
+        assert q.isActive
+        q.processAllAvailable()
+        assert q.exception() is None
+        assert os.path.isdir(os.path.join(out, first_batch))
+    finally:
+        q.stop()
+    assert not q.isActive

@@ -86,14 +86,14 @@ def _shape_frame(spark, shape: str):
 @pytest.mark.parametrize("shape", ["int_array", "long_scalar", "str_scalar"])
 def test_every_key_in_exactly_its_shard(spark, shape, n):
     from cuckoofilter_spark.operators.build import (
-        build_sketch_shards, shard_id_expr, string_key_expr,
+        build_sketch_shards, hash_string_keys, shard_id_expr,
     )
 
     df = _shape_frame(spark, shape)
     keys = df.select(F.explode("k").alias("k")) if shape == "int_array" \
         else df
-    key = string_key_expr("k") if shape == "str_scalar" else F.col("k")
-    # keys as the build sees them: a NULL string hashes to a key too
+    key = hash_string_keys(F.col("k"), keys.schema["k"].dataType)
+    # keys as the build sees them: NULL rows and elements are no keys
     owner = {
         r["key"]: r["shard"] for r in keys.select(
             key.cast("long").alias("key"), shard_id_expr(key, n).alias("shard")
@@ -184,3 +184,44 @@ def test_probe_long_key_with_null_in_batch(spark):
         probe("k").alias("hit")).collect()] == [True, None]
     alone = spark.createDataFrame([(key,)], "k long")
     assert alone.select(probe("k")).collect()[0][0] is True
+
+
+@pytest.mark.parametrize("schema", ["k string", "k array<string>"])
+@pytest.mark.parametrize("strategy",
+                         ["local", "shuffle_distinct", "shuffle_count"])
+def test_null_strings_are_not_keys(spark, schema, strategy):
+    """NULL string rows and NULL array elements never reach the
+    kernel: the shards hold exactly the distinct non-null strings.
+    ``shuffle_count`` needs a counting sketch (Misra-Gries, whose
+    shard metrics carry no key count), so there the shards' tracked
+    keys and stream mass are read from the blobs."""
+    from cuckoofilter_spark.core.registry import sketch_from_bytes
+    from cuckoofilter_spark.operators.build import build_sketch_shards
+
+    words = [None if i % 5 == 0 else f"w{i % 23}" for i in range(120)]
+    if schema == "k string":
+        rows, values = [(w,) for w in words], words
+    else:
+        rows = [None if i % 11 == 0 else [w, None, f"x{i % 7}"]
+                for i, w in enumerate(words)]
+        values = [v for r in rows if r is not None for v in r]
+        rows = [(r,) for r in rows]
+    non_null = [v for v in values if v is not None]
+    # one input partition: the local strategy's single shard is global
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                               schema)
+    if strategy == "shuffle_count":
+        kind, params = "mg", {"k": 1024, "distinct": False,
+                              "weight_by_count": True}
+    else:
+        kind, params = "cuckoo", {"max_num_keys": 4096}
+    shards = build_sketch_shards(
+        df, "k", kind=kind, lineage=False, strategy=strategy,
+        shuffle_partitions=4, seed=7, **params,
+    ).select("sketch", "metrics.keys").collect()
+    if kind == "cuckoo":
+        assert sum(r["keys"] for r in shards) == len(set(non_null))
+    else:
+        sks = [sketch_from_bytes(r["sketch"]) for r in shards]
+        assert sum(len(sk.keys) for sk in sks) == len(set(non_null))
+        assert sum(sk.total for sk in sks) == len(non_null)
