@@ -34,16 +34,23 @@ Differences from the reference, by design (documented, deliberate):
   uses ``std::random_device`` + unseeded ``rand()`` — not reproducible,
   ``src/hashutil.h:53-62``, ``src/singletable.h:199``). Deterministic
   seeds are what make distributed shard filters mergeable.
-- ``merge`` is new (the reference is single-machine): re-insert every
-  non-zero tag of B starting at its own bucket (the alt index is
-  recoverable via the involution). Merge can overflow — it surfaces
-  victim-parking / NotEnoughSpace identically to Add, never silently
-  drops a tag.
+- ``merge``/``merge_many`` are new (the reference is single-machine):
+  re-insert every non-zero tag of the other filters starting at its
+  own bucket (the alt index is recoverable via the involution), then,
+  in one final batch, their parked victims. Merge can overflow — it
+  parks a victim like Add, or raises, but never silently drops a tag.
 - inserts are *batch* operations: one unique-bucket placement round per
   vector step instead of a per-item loop. The placement distribution
   differs from the reference's strictly-sequential order but every
   membership guarantee (no false negatives, load factor, victim
   semantics) is preserved.
+
+``CuckooFilter`` is the one table engine, as the reference's
+``CuckooFilter<…, TableType>`` driver is for its ``SingleTable`` and
+``PackedTable``: sizing, hashing, insert, kick chain, delete, merge and
+the blob header live here. A table layout (``semisort.py``) differs
+only in its width set ``WIDTHS`` and its packed bucket body codec
+(``_pack_body``/``_unpack_body``, blob kinds 1 and 3).
 """
 
 from __future__ import annotations
@@ -65,6 +72,7 @@ from cuckoofilter_spark.core.hashing import (
 )
 
 ASSOC = 4                # kTagsPerBucket, src/singletable.h:17
+MAX_CUCKOO_KICKS = 500   # kMaxCuckooCount, src/cuckoofilter.h:23
 
 
 def _occupied_pairs(table: np.ndarray):
@@ -84,9 +92,11 @@ def _occupied_pairs(table: np.ndarray):
     sub = table[occ]
     s_idx, s_slot = np.nonzero(sub)
     return occ[s_idx].astype(np.uint64), sub[s_idx, s_slot].astype(np.uint32)
-MAX_CUCKOO_KICKS = 500   # kMaxCuckooCount, src/cuckoofilter.h:23
-_HARD_KICK_CAP = 5000    # never drop a tag silently: raise past this
-_MAGIC = b"CKF1"
+
+
+def _table_dtype(f: int):
+    """One uint16 lane per slot up to 16-bit tags, else uint32."""
+    return np.uint32 if f > 16 else np.uint16
 
 
 def suggest_capacity(
@@ -143,36 +153,59 @@ class Victim:
 class CuckooFilter:
     """Single-table cuckoo filter over uint64 keys, batch-first API.
 
-    API: ``add_many / contains_many / delete_many / merge / to_bytes /
-    from_bytes`` plus scalar ``add / contain / delete`` convenience.
+    API: ``add_many / contains_many / delete_many / merge / merge_many
+    / to_bytes / from_bytes`` plus scalar ``add / contain / delete``
+    convenience. A table layout subclass sets ``KIND``, ``_MAGIC`` and
+    ``WIDTHS`` and overrides the packed body codec.
     """
 
     KIND = "cuckoo"
+    WIDTHS = (2, 4, 8, 12, 16, 32)
+    _MAGIC = b"CKF1"
+    # magic, version, f, victim used, num_buckets, num_items, seed,
+    # victim index, victim tag, body kind, hash family. The family
+    # byte sits in a former pad position — older blobs read back as
+    # 0 = multiply_shift, the only family they could use.
+    _HEADER = struct.Struct("<4sBBBxQQQQIBB2x")
 
     def __init__(self, max_num_keys: int, bits_per_item: int = 12,
                  seed: int = 2014, hash_family: str = "multiply_shift"):
-        if bits_per_item not in (2, 4, 8, 12, 16, 32):
-            raise ValueError(f"unsupported fingerprint width f={bits_per_item}")
+        if bits_per_item not in self.WIDTHS:
+            raise ValueError(
+                f"unsupported {self.KIND} fingerprint width "
+                f"f={bits_per_item}; choose from {self.WIDTHS}"
+            )
         if hash_family not in HASH_FAMILIES:
             raise ValueError(
                 f"unknown hash_family {hash_family!r}; "
                 f"choose from {sorted(HASH_FAMILIES)}"
             )
-        self.f = int(bits_per_item)
-        self.seed = int(seed)
-        self.hash_family = hash_family
         # sizing formula, src/cuckoofilter.h:89-98
         num_buckets = upperpower2(max(1, max_num_keys // ASSOC))
-        frac = max_num_keys / (num_buckets * ASSOC)
-        if frac > 0.96:
+        if max_num_keys / (num_buckets * ASSOC) > 0.96:
             num_buckets <<= 1
-        self.num_buckets = num_buckets
-        dtype = np.uint32 if self.f > 16 else np.uint16
-        self.table = np.zeros((num_buckets, ASSOC), dtype=dtype)
-        self.num_items = 0
-        self.victim = Victim()
+        f, seed = int(bits_per_item), int(seed)
+        table = np.zeros((num_buckets, ASSOC), dtype=_table_dtype(f))
+        self._setup(f, seed, hash_family, table, 0, Victim(),
+                    seed ^ 0x9E3779B9)
+
+    def _setup(self, f: int, seed: int, hash_family: str,
+               table: np.ndarray, num_items: int, victim: Victim,
+               rng_seed: int) -> None:
+        """The one place object state is set — by ``__init__`` with an
+        empty table and by ``from_bytes`` with the decoded one. The kick
+        RNG decides which slot a later kick evicts, so its seed fixes
+        the bytes of every later insert and merge: ``seed ^ 0x9E3779B9``
+        for a new filter, further ``^ num_items`` after ``from_bytes``."""
+        self.f = f
+        self.seed = seed
+        self.hash_family = hash_family
+        self.table = table
+        self.num_buckets = len(table)
+        self.num_items = num_items
+        self.victim = victim
         self.hasher = HASH_FAMILIES[hash_family](seed)
-        self._rng = np.random.Generator(np.random.PCG64(seed ^ 0x9E3779B9))
+        self._rng = np.random.Generator(np.random.PCG64(rng_seed))
         self.kicks = 0  # build-stat: total evictions performed (not serialized)
 
     # ----------------------------------------------------------------- sizing
@@ -301,7 +334,7 @@ class CuckooFilter:
                             "displaced resident tag is in flight — refusing to "
                             "drop it (grow capacity or lower the load factor)"
                         )
-                    if self._kick_chain(bucket, tag) == "placed":
+                    if self._kick_chain(bucket, tag):
                         inserted += 1
             else:
                 # low-headroom regime: reference-faithful single-Add
@@ -315,11 +348,10 @@ class CuckooFilter:
                             )
                         out[owner[j]] = int(Status.NotEnoughSpace)
                         continue
-                    result = self._kick_chain(int(cur_idx[j]), int(cur_tag[j]))
-                    if result == "placed":
+                    if self._kick_chain(int(cur_idx[j]), int(cur_tag[j])):
                         inserted += 1
-                    # "victim": occupancy-neutral (new tag in, displaced
-                    # tag parked); owner still gets Ok
+                    # else parked: occupancy-neutral (new tag in,
+                    # displaced tag parked); owner still gets Ok
                     # (src/cuckoofilter.h:158-161)
 
         self.num_items += inserted
@@ -364,6 +396,45 @@ class CuckooFilter:
             self._stamp = buf
         return buf[:q]
 
+    def _claim_round(self, b: np.ndarray):
+        """Claim-stamp winner pick for one round: one item per distinct
+        bucket of ``b`` wins (the last writer of an O(q) scatter, no
+        sort), so the round's writes never conflict. Returns the win
+        mask and the winners' positions in ``b``."""
+        claim = self._claim_buf()
+        stamp = self._stamp_buf(len(b))
+        claim[b] = stamp                        # last writer wins
+        win = claim[b] == stamp
+        return win, np.flatnonzero(win)
+
+    def _place_first_empty(self, wb: np.ndarray, tags: np.ndarray,
+                           sel: np.ndarray) -> np.ndarray:
+        """Write ``tags[sel[j]]`` into the first empty slot of the
+        distinct bucket ``wb[j]``, where it has one; returns that
+        has-empty mask. uint16 tables take the SWAR word path: one
+        uint64 gather + ~6 word ops per bucket instead of a (q,4) row
+        gather + 3 lane reductions."""
+        table = self.table
+        if table.dtype == np.uint16:
+            t64 = table.reshape(-1).view(np.uint64)
+            w = t64[wb]
+            has, shift = self._swar_first_empty(w)
+            hasi = np.flatnonzero(has)
+            if len(hasi):
+                # the target lane is zero → OR suffices, no mask
+                t64[wb[hasi]] = w[hasi] | (
+                    tags[sel[hasi]].astype(np.uint64) << shift[hasi]
+                )
+        else:
+            empty = table[wb] == 0
+            has = empty.any(axis=1)
+            hasi = np.flatnonzero(has)
+            if len(hasi):
+                table[wb[hasi], empty.argmax(axis=1)[hasi]] = (
+                    tags[sel[hasi]].astype(table.dtype)
+                )
+        return has
+
     def _bulk_place_dual(self, idx: np.ndarray, tags: np.ndarray):
         """Fused claim-round empty-slot fill over BOTH candidate
         buckets: per round, one item per distinct bucket wins
@@ -377,10 +448,6 @@ class CuckooFilter:
         i1-spilled item from scratch, and before that an O(n log n)
         stable argsort).
 
-        uint16 tables take the SWAR word path: one uint64 gather + ~6
-        word ops per bucket instead of a (q,4) row gather + 3 lane
-        reductions.
-
         Returns ``(n_placed, spill_idx, spill_tag, spill_owner)`` —
         the spilled items' ALT (i2) bucket as uint64, their tags, and
         their positions in the input batch (for status reporting).
@@ -391,7 +458,6 @@ class CuckooFilter:
         owner+phase packed into one int32 (owner < _ADD_CHUNK = 2^18,
         phase in bit 30) — halving the scatter/gather/compaction
         traffic of every round vs the previous int64 lanes."""
-        table = self.table
         n = len(idx)
         # owner|phase packing puts the phase flag at bit 30 — a batch
         # >= 2^30 would silently corrupt owner indices. All callers
@@ -403,9 +469,6 @@ class CuckooFilter:
                 "batch too large for int32 owner|phase lanes "
                 f"(n={n} >= 2^30); chunk at _ADD_CHUNK"
             )
-        claim = self._claim_buf()
-        words = table.dtype == np.uint16
-        t64 = table.reshape(-1).view(np.uint64) if words else None
         b = idx.astype(np.uint32)
         tg = tags.astype(np.uint32, copy=False)
         st = np.arange(n, dtype=np.int32)   # owner | phase << 30
@@ -417,39 +480,15 @@ class CuckooFilter:
         _ALT_C = np.uint32(0x5BD1E995)
         _BMASK = np.uint32(self.num_buckets - 1)
         placed = 0
-        sp_b: list[np.ndarray] = []
-        sp_t: list[np.ndarray] = []
-        sp_o: list[np.ndarray] = []
+        sp_b = [np.empty(0, dtype=np.uint64)]
+        sp_t = [np.empty(0, dtype=np.uint32)]
+        sp_o = [np.empty(0, dtype=np.int64)]
         while len(b):
             q = len(b)
-            stamp = self._stamp_buf(q)
-            claim[b] = stamp                    # last writer wins
-            win = claim[b] == stamp
-            wi = np.flatnonzero(win)
-            wb = b[wi]
-            if words:
-                w = t64[wb]
-                has, shift = self._swar_first_empty(w)
-                hasi = np.flatnonzero(has)
-                if len(hasi):
-                    wbh = wb[hasi]
-                    # the target lane is zero → OR suffices, no mask
-                    t64[wbh] = w[hasi] | (
-                        tg[wi[hasi]].astype(np.uint64) << shift[hasi]
-                    )
-                    placed += len(hasi)
-            else:
-                rows = table[wb]
-                empty = rows == 0
-                has = empty.any(axis=1)
-                slot = empty.argmax(axis=1)
-                hasi = np.flatnonzero(has)
-                if len(hasi):
-                    table[wb[hasi], slot[hasi]] = (
-                        tg[wi[hasi]].astype(table.dtype)
-                    )
-                    placed += len(hasi)
+            win, wi = self._claim_round(b)
+            has = self._place_first_empty(b[wi], tg, wi)
             fw = wi[~has]                       # winners, bucket full
+            placed += len(wi) - len(fw)
             if len(fw):
                 at1 = (st[fw] & _PH) != 0
                 fb1 = fw[at1]                   # full at i2 → spill
@@ -470,18 +509,11 @@ class CuckooFilter:
                 ki = np.concatenate((ki, fb0))
             if len(ki) < q:
                 b, tg, st = b[ki], tg[ki], st[ki]
-        if sp_b:
-            return (
-                placed,
-                np.concatenate(sp_b),
-                np.concatenate(sp_t),
-                np.concatenate(sp_o),
-            )
         return (
             placed,
-            np.empty(0, dtype=np.uint64),
-            np.empty(0, dtype=np.uint32),
-            np.empty(0, dtype=np.int64),
+            np.concatenate(sp_b),
+            np.concatenate(sp_t),
+            np.concatenate(sp_o),
         )
 
     _KICK_TAIL = 48  # below this queue length, scalar chains win
@@ -499,34 +531,13 @@ class CuckooFilter:
         cur_tag = cur_tag.astype(np.uint32, copy=True)
         counts = np.zeros(len(cur_idx), dtype=np.int32)
         leftovers: list[tuple[int, int]] = []
-        claim = self._claim_buf()
 
         words = table.dtype == np.uint16
         t64 = table.reshape(-1).view(np.uint64) if words else None
         while len(cur_idx) > self._KICK_TAIL:
-            q = len(cur_idx)
-            ar = np.arange(q, dtype=np.int32)
             b = cur_idx.astype(np.int64)
-            claim[b] = ar
-            winm = claim[b] == ar
-            sel = np.flatnonzero(winm)
-            bw = b[sel]
-            if words:
-                w = t64[bw]
-                has, shift = self._swar_first_empty(w)
-                if has.any():
-                    t64[bw[has]] = w[has] | (
-                        cur_tag[sel[has]].astype(np.uint64) << shift[has]
-                    )
-            else:
-                rows = table[bw]
-                empty = rows == 0
-                has = empty.any(axis=1)
-                slot = empty.argmax(axis=1)
-                if has.any():
-                    table[bw[has], slot[has]] = (
-                        cur_tag[sel[has]].astype(table.dtype)
-                    )
+            winm, sel = self._claim_round(b)
+            has = self._place_first_empty(b[sel], cur_tag, sel)
             kick = sel[~has]
             defer = np.flatnonzero(~winm)
             if len(kick):
@@ -588,31 +599,15 @@ class CuckooFilter:
             bucket = (bucket ^ ((tag * 0x5BD1E995) & 0xFFFFFFFF)) & mask
         return (bucket, tag)
 
-    def _kick_chain(self, bucket: int, tag: int) -> str:
+    def _kick_chain(self, bucket: int, tag: int) -> bool:
         """One sequential eviction chain, ≤ MAX_CUCKOO_KICKS random
-        kicks (src/cuckoofilter.h:139-162, src/singletable.h:198-202)."""
-        table = self.table
-        cur_idx, cur_tag = bucket, tag
-        for _count in range(MAX_CUCKOO_KICKS):
-            row = table[cur_idx]
-            empties = np.flatnonzero(row == 0)
-            if len(empties):
-                row[empties[0]] = table.dtype.type(cur_tag)
-                return "placed"
-            slot = int(self._rng.integers(0, ASSOC))
-            self.kicks += 1
-            old = int(row[slot])
-            row[slot] = table.dtype.type(cur_tag)
-            cur_tag = old
-            cur_idx = int(
-                alt_index(
-                    np.array([cur_idx], dtype=np.uint64),
-                    np.array([cur_tag], dtype=np.uint32),
-                    self.num_buckets,
-                )[0]
-            )
-        self.victim = Victim(index=cur_idx, tag=cur_tag, used=True)
-        return "victim"
+        kicks (src/cuckoofilter.h:139-162, src/singletable.h:198-202);
+        on exhaustion the in-flight tag parks as the victim
+        (src/cuckoofilter.h:158-161). Returns whether it was placed."""
+        left = self._kick_chain_int(bucket, tag)
+        if left is not None:
+            self.victim = Victim(index=left[0], tag=left[1], used=True)
+        return left is None
 
     # --------------------------------------------------------------- lookup
     _SWAR_LOW = np.uint64(0x0001000100010001)
@@ -723,13 +718,10 @@ class CuckooFilter:
 
     # ---------------------------------------------------------------- merge
     def merge(self, other: "CuckooFilter", dedup: bool = False) -> "CuckooFilter":
-        """In-place union with a same-geometry, same-seed filter.
-
-        Re-inserts every non-zero tag of ``other`` at its current
-        bucket (phase>=1 so the chain may evict) — valid because the
-        alt index is recoverable from (bucket, tag) alone. Raises on
-        geometry/seed mismatch; surfaces overflow via victim parking or
-        RuntimeError exactly like Add.
+        """In-place union with a same-geometry, same-seed filter:
+        ``merge_many([self, other], dedup=dedup)``, so it re-inserts
+        ``other``'s table tags, then its parked victim, and shares the
+        checks and overflow behaviour described there.
 
         ``dedup=True`` is **set-mode** merge (not in the reference —
         merge itself is new, §2.1 of SURVEY.md): a tag of ``other`` is
@@ -744,78 +736,54 @@ class CuckooFilter:
         tree-merge. Counting deletes degrade (one stored copy per
         fingerprint), so multiset mode stays the default.
         """
-        if (
-            other.f != self.f
-            or other.num_buckets != self.num_buckets
-            or other.seed != self.seed
-            or other.hash_family != self.hash_family
-        ):
-            raise ValueError(
-                "merge requires identical geometry, seed and hash family"
-            )
-        if self.victim.used:
-            raise RuntimeError("merge into a full filter (victim occupied)")
-        idx, tags = _occupied_pairs(other.table)
-        if len(idx):
-            if dedup:
-                idx, tags = self._dedup_pairs(idx, tags)
-            if len(idx):
-                # phase=1: these tags are already "resident somewhere
-                # valid"; start at their current bucket, eviction allowed.
-                self._merge_insert(idx, tags)
-        if other.victim.used:
-            v_idx = np.array([other.victim.index], dtype=np.uint64)
-            v_tag = np.array([other.victim.tag], dtype=np.uint32)
-            if dedup:
-                v_idx, v_tag = self._dedup_pairs(v_idx, v_tag)
-            if len(v_idx):
-                self._merge_insert(v_idx, v_tag)
-        return self
+        return type(self).merge_many([self, other], dedup=dedup)
 
     @classmethod
     def merge_many(cls, filters: list, dedup: bool = True) -> "CuckooFilter":
-        """Vectorized k-way merge — the tree-merge group kernel.
+        """k-way in-place union into ``filters[0]`` — the tree-merge
+        group kernel, and the body of ``merge``.
 
-        Stacks all k tables into one (buckets, 4k) array, dedups equal
-        tags within each bucket (set mode), bulk-writes every bucket
-        that fits its ≤4 survivors, and routes only the overflow tags
-        through the insert/kick machinery. Replaces k-1 pairwise
-        merges of per-tag re-insertion — at typical shard loads almost
-        every bucket fits and the merge is a handful of array passes.
+        Every non-zero (bucket, tag) of ``filters[1:]`` is gathered by
+        a bucket-word scan and re-inserted in ONE batch through the
+        placement and kick machinery, each tag starting at its current
+        bucket — valid because the alt index is recoverable from
+        (bucket, tag) alone. The inputs' parked victims follow in one
+        final batch, after every table tag, so a victim is checked
+        against the merged table. ``num_items`` is recounted from the
+        table.
 
-        Set-mode scope note: dedup collapses equal tags in the SAME
-        bucket; a fingerprint resident at i1 in one shard and i2 in
-        another keeps both copies (harmless for membership, costs one
-        slot). The pairwise ``merge(dedup=True)`` has identical
-        observable semantics.
+        ``dedup=True`` (set mode, see ``merge``) dedups each batch
+        within itself and against the table at that point. It collapses
+        equal tags of the same bucket pair; a fingerprint two keys put
+        in two different pairs keeps both copies.
+
+        Raises ValueError on a geometry, seed or hash-family mismatch,
+        RuntimeError when ``filters[0]`` holds a victim. Overflow parks
+        one victim like Add; a tag that then cannot be placed raises
+        RuntimeError — a merge never silently drops a tag.
         """
         if not filters:
             raise ValueError("merge_many of zero filters")
-        base = filters[0]
+        base, rest = filters[0], filters[1:]
         if base.victim.used:
             raise RuntimeError("merge into a full filter (victim occupied)")
-        idx_parts: list[np.ndarray] = []
-        tag_parts: list[np.ndarray] = []
-        for f in filters[1:]:
+        for f in rest:
             if (f.f != base.f or f.num_buckets != base.num_buckets
                     or f.seed != base.seed
                     or f.hash_family != base.hash_family):
                 raise ValueError(
                     "merge requires identical geometry, seed and hash family"
                 )
-            b_idx, tags = _occupied_pairs(f.table)
-            idx_parts.append(b_idx)
-            tag_parts.append(tags)
-            if f.victim.used:
-                idx_parts.append(np.array([f.victim.index], dtype=np.uint64))
-                tag_parts.append(np.array([f.victim.tag], dtype=np.uint32))
-        if idx_parts:
-            idx = np.concatenate(idx_parts)
-            tags = np.concatenate(tag_parts)
-            if dedup:
-                idx, tags = base._dedup_pairs(idx, tags)
-            if len(idx):
-                base._merge_insert(idx, tags)
+        if rest:
+            pairs = [_occupied_pairs(f.table) for f in rest]
+            base._merge_insert(np.concatenate([p[0] for p in pairs]),
+                               np.concatenate([p[1] for p in pairs]), dedup)
+        victims = [f.victim for f in rest if f.victim.used]
+        if victims:
+            base._merge_insert(
+                np.array([v.index for v in victims], dtype=np.uint64),
+                np.array([v.tag for v in victims], dtype=np.uint32), dedup,
+            )
         base.num_items = int((base.table != 0).sum())
         return base
 
@@ -840,24 +808,21 @@ class CuckooFilter:
         t = tags.astype(self.table.dtype)[:, None]
         present = (self.table[canon.astype(np.int64)] == t).any(axis=1)
         present |= (self.table[other_b] == t).any(axis=1)
-        if self.victim.used:
-            v_canon = min(
-                self.victim.index,
-                int(
-                    alt_index(
-                        np.array([self.victim.index], dtype=np.uint64),
-                        np.array([self.victim.tag], dtype=np.uint32),
-                        self.num_buckets,
-                    )[0]
-                ),
-            )
-            present |= (canon == np.uint64(v_canon)) & (
-                tags == np.uint32(self.victim.tag)
+        v = self.victim
+        if v.used:
+            v_alt = alt_index(np.array([v.index], dtype=np.uint64),
+                              np.array([v.tag], dtype=np.uint32),
+                              self.num_buckets)[0]
+            present |= (canon == min(np.uint64(v.index), v_alt)) & (
+                tags == np.uint32(v.tag)
             )
         keep = ~present
         return idx[keep], tags[keep]
 
-    def _merge_insert(self, idx: np.ndarray, tags: np.ndarray) -> None:
+    def _merge_insert(self, idx: np.ndarray, tags: np.ndarray,
+                      dedup: bool) -> None:
+        if dedup:
+            idx, tags = self._dedup_pairs(idx, tags)
         # try current bucket first (it IS one of the two legal buckets);
         # must_place: a merge may park ONE victim but never drops a tag.
         # Chunked at _ADD_CHUNK like add_many: _bulk_place_dual packs
@@ -872,32 +837,39 @@ class CuckooFilter:
             )
 
     # ------------------------------------------------------------ serialize
-    def to_bytes(self) -> bytes:
-        """Versioned blob; the table section is zlib(level=1)-packed.
+    def to_bytes(self, packed: bool = True) -> bytes:
+        """Versioned blob: ``_HEADER``, then the bucket body,
+        zlib(level=1)-compressed when that is smaller. kind byte:
+        0 = raw table, 1 = packed body, 2 = raw + zlib, 3 = packed +
+        zlib.
 
         Shard tables sized for the GLOBAL key count run at low local
         load — mostly zero bytes — so light compression shrinks the
         blobs that cross every shuffle/collect/broadcast by 5-20x for
-        one cheap pass. kind byte: 0 = raw table, 2 = zlib table."""
+        one cheap pass.
+
+        ``packed=True`` writes the layout's packed body where it has
+        one (the semi-sorted table); the plain table has none and
+        writes the raw table either way. ``packed=False`` skips the
+        permutation codec entirely. Shard blobs and intermediate merge
+        rounds use it (via ``registry.wire_bytes``): the 1 bit/tag the
+        reference's PackedTable saves (src/packedtable.h:13) only
+        matters on the blob that is STORED or BROADCAST — the final
+        one — while the codec cost would otherwise be paid on every
+        shuffle boundary (measured 3.5x of the whole build at sf0.1,
+        BENCH_r01)."""
         import zlib
 
-        raw = self.table.tobytes()
-        packed = zlib.compress(raw, 1)
-        kind, body = (2, packed) if len(packed) < len(raw) else (0, raw)
-        # family byte sits in a former pad position — older blobs read
-        # back as 0 = multiply_shift, the only family they could use
-        header = struct.pack(
-            "<4sBBBxQQQQIBB2x",
-            _MAGIC,
-            1,                      # version
-            self.f,
-            1 if self.victim.used else 0,
-            self.num_buckets,
-            self.num_items,
+        body = self._pack_body() if packed else None
+        kind, body = (0, self.table.tobytes()) if body is None else (1, body)
+        small = zlib.compress(body, 1)
+        if len(small) < len(body):
+            kind, body = kind + 2, small
+        header = self._HEADER.pack(
+            self._MAGIC, 1, self.f, 1 if self.victim.used else 0,
+            self.num_buckets, self.num_items,
             self.seed & 0xFFFFFFFFFFFFFFFF,
-            self.victim.index,
-            self.victim.tag,
-            kind,
+            self.victim.index, self.victim.tag, kind,
             FAMILY_IDS[self.hash_family],
         )
         return header + body
@@ -906,27 +878,43 @@ class CuckooFilter:
     def from_bytes(cls, blob: bytes) -> "CuckooFilter":
         import zlib
 
-        hdr_size = struct.calcsize("<4sBBBxQQQQIBB2x")
+        hdr = cls._HEADER
         (magic, ver, f, v_used, nb, items, seed, v_idx, v_tag, kind,
-         family) = struct.unpack("<4sBBBxQQQQIBB2x", blob[:hdr_size])
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad cuckoo blob")
-        obj = cls.__new__(cls)
-        obj.f = f
-        obj.seed = seed
-        obj.num_buckets = nb
-        obj.hash_family = FAMILY_NAMES[family]
-        dtype = np.uint32 if f > 16 else np.uint16
-        body = blob[hdr_size:]
-        if kind == 2:
+         family) = hdr.unpack(blob[:hdr.size])
+        # the width picks the tag hash (and the packed decoder's
+        # shifts): a corrupt width would parse into a filter that
+        # answers False for keys it holds
+        if magic != cls._MAGIC or ver != 1 or f not in cls.WIDTHS:
+            raise ValueError(f"bad {cls.KIND} blob (version {ver}, f={f})")
+        body = blob[hdr.size:]
+        if kind in (2, 3):
             body = zlib.decompress(body)
-        obj.table = np.frombuffer(body, dtype=dtype).reshape(nb, ASSOC).copy()
-        obj.num_items = items
-        obj.victim = Victim(index=v_idx, tag=v_tag, used=bool(v_used))
-        obj.hasher = HASH_FAMILIES[obj.hash_family](seed)
-        obj._rng = np.random.Generator(np.random.PCG64(seed ^ 0x9E3779B9 ^ items))
-        obj.kicks = 0
+        if kind in (1, 3):
+            table = cls._unpack_body(body, f)
+        else:
+            table = np.frombuffer(body, dtype=_table_dtype(f))
+            table = table.reshape(-1, ASSOC).copy()
+        if len(table) != nb:
+            # header/body disagreement = corruption, not a table
+            raise ValueError(
+                f"bad {cls.KIND} blob: header num_buckets={nb} but "
+                f"body holds {len(table)} buckets"
+            )
+        obj = cls.__new__(cls)
+        obj._setup(f, seed, FAMILY_NAMES[family], table, items,
+                   Victim(index=v_idx, tag=v_tag, used=bool(v_used)),
+                   seed ^ 0x9E3779B9 ^ items)
         return obj
+
+    def _pack_body(self) -> bytes | None:
+        """The layout's packed bucket body (blob kinds 1 and 3), or
+        None: the plain table has none, so it always writes raw."""
+        return None
+
+    @classmethod
+    def _unpack_body(cls, raw: bytes, f: int) -> np.ndarray:
+        """(num_buckets, ASSOC) table from a packed bucket body."""
+        raise ValueError(f"bad {cls.KIND} blob: no packed body kind")
 
     # ------------------------------------------------- table micro-ops
     # Reference SingleTable parity surface (src/singletable.h §2.2 of

@@ -25,18 +25,9 @@ our layout is parameterized for every width.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from cuckoofilter_spark.core.cuckoo import ASSOC, CuckooFilter, Victim
-from cuckoofilter_spark.core.hashing import (
-    FAMILY_IDS,
-    FAMILY_NAMES,
-    HASH_FAMILIES,
-)
-
-_MAGIC = b"CKS1"
+from cuckoofilter_spark.core.cuckoo import ASSOC, CuckooFilter, _table_dtype
 
 N_ENTS = 3876  # C(16+4-1, 4), src/permencoding.h:48
 
@@ -92,42 +83,24 @@ def decode_codewords(cw: np.ndarray) -> np.ndarray:
 class SemiSortCuckooFilter(CuckooFilter):
     """Cuckoo filter whose blobs use the semi-sorted packed layout.
 
+    Only two things differ from ``CuckooFilter``, which drives sizing,
+    insert, kicks, delete, merge and the blob header for both: the
+    width set ``WIDTHS`` (default f=13) and the permutation-packed
+    bucket body of blob kinds 1 and 3 (``_pack_body`` /
+    ``_unpack_body``); ``to_bytes(packed=False)`` writes the raw
+    table like the plain filter.
+
     Bucket wire format (little-endian bucket word of (3+d)*4 bits,
     d = f-4 dir bits per tag): codeword in bits [0,12), then the four
     dir-bit fields in low-nibble-sorted order."""
 
     KIND = "semisort"
     WIDTHS = (5, 6, 7, 8, 9, 13, 17)  # src/packedtable.h:126-189
+    _MAGIC = b"CKS1"
 
     def __init__(self, max_num_keys: int, bits_per_item: int = 13,
                  seed: int = 2014, hash_family: str = "multiply_shift"):
-        if bits_per_item not in self.WIDTHS:
-            raise ValueError(
-                f"semi-sorted width f={bits_per_item} not in {self.WIDTHS}"
-            )
-        # bypass the parent's width check, reuse its geometry logic
-        self._init_geometry(max_num_keys, bits_per_item, seed, hash_family)
-
-    def _init_geometry(self, max_num_keys: int, bits_per_item: int,
-                       seed: int, hash_family: str) -> None:
-        from cuckoofilter_spark.core.hashing import upperpower2
-
-        if hash_family not in HASH_FAMILIES:
-            raise ValueError(f"unknown hash_family {hash_family!r}")
-        self.f = int(bits_per_item)
-        self.seed = int(seed)
-        self.hash_family = hash_family
-        num_buckets = upperpower2(max(1, max_num_keys // ASSOC))
-        if max_num_keys / (num_buckets * ASSOC) > 0.96:
-            num_buckets <<= 1
-        self.num_buckets = num_buckets
-        dtype = np.uint32 if self.f > 16 else np.uint16
-        self.table = np.zeros((num_buckets, ASSOC), dtype=dtype)
-        self.num_items = 0
-        self.victim = Victim()
-        self.hasher = HASH_FAMILIES[hash_family](seed)
-        self._rng = np.random.Generator(np.random.PCG64(seed ^ 0x9E3779B9))
-        self.kicks = 0
+        super().__init__(max_num_keys, bits_per_item, seed, hash_family)
 
     # ------------------------------------------------------------- layout
     @property
@@ -142,10 +115,15 @@ class SemiSortCuckooFilter(CuckooFilter):
     def packed_size_bytes(self) -> int:
         """kBytesPerBucket * num_buckets (src/packedtable.h:18) — the
         space-parity metric; f=13 stores 12 bits/tag."""
-        return ((self.bits_per_bucket + 7) >> 3) * self.num_buckets
+        return self._bucket_bytes(self.f) * self.num_buckets
+
+    @staticmethod
+    def _bucket_bytes(f: int) -> int:
+        """kBytesPerBucket (src/packedtable.h:17-18) at width ``f``."""
+        return ((3 + f - 4) * 4 + 7) >> 3
 
     # ---------------------------------------------------------- serialize
-    def _packed_buckets(self) -> bytes:
+    def _pack_body(self) -> bytes:
         tags = self.table.astype(np.uint64)
         lb = tags & np.uint64(0xF)
         db = tags >> np.uint64(4)
@@ -170,11 +148,13 @@ class SemiSortCuckooFilter(CuckooFilter):
         for j in range(ASSOC):
             word |= db_s[:, j] << np.uint64(shift)
             shift += self.dir_bits
-        nbytes = (self.bits_per_bucket + 7) >> 3
+        nbytes = self._bucket_bytes(self.f)
         return word.astype("<u8").view(np.uint8).reshape(-1, 8)[:, :nbytes].tobytes()
 
-    def _unpack_buckets(self, raw: bytes) -> np.ndarray:
-        nbytes = (self.bits_per_bucket + 7) >> 3
+    @classmethod
+    def _unpack_body(cls, raw: bytes, f: int) -> np.ndarray:
+        dir_bits = f - 4
+        nbytes = cls._bucket_bytes(f)
         flat = np.frombuffer(raw, dtype=np.uint8).reshape(-1, nbytes)
         padded = np.zeros((len(flat), 8), dtype=np.uint8)
         padded[:, :nbytes] = flat
@@ -182,14 +162,13 @@ class SemiSortCuckooFilter(CuckooFilter):
         cw = (word & np.uint64(0xFFF)).astype(np.int64)
         lb = decode_codewords(cw).astype(np.uint64)
         tags = np.empty((len(word), ASSOC), dtype=np.uint64)
-        mask = np.uint64((1 << self.dir_bits) - 1)
+        mask = np.uint64((1 << dir_bits) - 1)
         shift = 12
         for j in range(ASSOC):
             db = (word >> np.uint64(shift)) & mask
             tags[:, j] = (db << np.uint64(4)) | lb[:, j]
-            shift += self.dir_bits
-        dtype = np.uint32 if self.f > 16 else np.uint16
-        return tags.astype(dtype)
+            shift += dir_bits
+        return tags.astype(_table_dtype(f))
 
     # ------------------------------------------------------------ debug
     def print_bucket(self, i: int) -> str:
@@ -217,79 +196,3 @@ class SemiSortCuckooFilter(CuckooFilter):
             f"items={self.num_items}, load={self.load_factor:.3f}, "
             f"family={self.hash_family!r})"
         )
-
-    def to_bytes(self, packed: bool = True) -> bytes:
-        """kind byte: 1 = perm-packed, 3 = perm-packed + zlib(level=1);
-        0 = raw uint16 table, 2 = raw + zlib — the *wire* format.
-
-        ``packed=False`` skips the permutation codec entirely. Shard
-        blobs and intermediate merge rounds use it (via
-        ``registry.wire_bytes``): the 1 bit/tag the reference's
-        PackedTable saves (src/packedtable.h:13) only matters on the
-        blob that is STORED or BROADCAST — the final one — while the
-        codec cost would otherwise be paid on every shuffle boundary
-        (measured 3.5x of the whole build at sf0.1, BENCH_r01)."""
-        import zlib
-
-        if packed:
-            raw = self._packed_buckets()
-            body = zlib.compress(raw, 1)
-            kind, body = (3, body) if len(body) < len(raw) else (1, raw)
-        else:
-            raw = self.table.tobytes()
-            body = zlib.compress(raw, 1)
-            kind, body = (2, body) if len(body) < len(raw) else (0, raw)
-        header = struct.pack(
-            "<4sBBBxQQQQIBB2x",
-            _MAGIC, 1, self.f, 1 if self.victim.used else 0,
-            self.num_buckets, self.num_items,
-            self.seed & 0xFFFFFFFFFFFFFFFF,
-            self.victim.index, self.victim.tag, kind,
-            FAMILY_IDS[self.hash_family],
-        )
-        return header + body
-
-    @classmethod
-    def from_bytes(cls, blob: bytes) -> "SemiSortCuckooFilter":
-        import zlib
-
-        hdr = struct.calcsize("<4sBBBxQQQQIBB2x")
-        (magic, ver, f, v_used, nb, items, seed, v_idx, v_tag, kind,
-         family) = struct.unpack("<4sBBBxQQQQIBB2x", blob[:hdr])
-        if magic != _MAGIC or ver != 1:
-            raise ValueError("bad semisort blob")
-        if not 5 <= f <= 32:
-            # corrupted f would drive >=64-bit shifts in the decoder
-            raise ValueError(f"bad semisort blob: f={f} out of range")
-        obj = cls.__new__(cls)
-        # direct geometry — do NOT run the sizing heuristic against
-        # nb*ASSOC (its 0.96 guard would double num_buckets and
-        # allocate a transient 2x table that is immediately replaced)
-        obj.f = int(f)
-        obj.seed = int(seed)
-        obj.num_buckets = int(nb)
-        obj.hash_family = FAMILY_NAMES[family]
-        obj.hasher = HASH_FAMILIES[obj.hash_family](seed)
-        body = blob[hdr:]
-        if kind in (2, 3):
-            body = zlib.decompress(body)
-        if kind in (1, 3):
-            obj.table = obj._unpack_buckets(body)
-            if obj.table.shape[0] != nb:
-                # header/body disagreement = corruption, not a table
-                raise ValueError(
-                    f"bad semisort blob: header num_buckets={nb} but "
-                    f"body decodes {obj.table.shape[0]} buckets"
-                )
-        else:
-            dtype = np.uint32 if f > 16 else np.uint16
-            obj.table = (
-                np.frombuffer(body, dtype=dtype).reshape(nb, ASSOC).copy()
-            )
-        obj.num_items = items
-        obj.victim = Victim(index=v_idx, tag=v_tag, used=bool(v_used))
-        obj._rng = np.random.Generator(
-            np.random.PCG64(seed ^ 0x9E3779B9 ^ items)
-        )
-        obj.kicks = 0
-        return obj

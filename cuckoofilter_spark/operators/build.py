@@ -96,6 +96,10 @@ SHARD_SCHEMA = (
     "strategy string, num_shards int, lineage array<string>"
 )
 
+# ``keys``: the first count a sketch keeps — stored tags (cuckoo,
+# bloom), items seen (kll), stream mass (cms, mg) or total weight
+# (tdigest). HLL and KMV keep no count and report 0.
+_KEY_COUNT_ATTRS = ("num_items", "n", "total", "count")
 METRICS_FIELDS = pa.struct(
     [
         ("keys", pa.int64()),
@@ -175,9 +179,8 @@ def check_add_statuses(statuses, where: str) -> None:
 def metrics_dict(sk, blob: bytes, *, n_deleted: int = 0,
                  n_not_found: int = 0) -> dict:
     """Uniform metrics struct for a shard row (build/merge/delete)."""
-    n_keys = getattr(sk, "num_items", None)
-    if n_keys is None:
-        n_keys = getattr(sk, "n", 0)
+    n_keys = next((getattr(sk, a) for a in _KEY_COUNT_ATTRS
+                   if hasattr(sk, a)), 0)
     return {
         "keys": int(n_keys),
         "load": float(getattr(sk, "load_factor", 0.0)),

@@ -30,6 +30,17 @@ from cuckoofilter_spark.core.registry import sketch_from_bytes, wire_bytes
 from cuckoofilter_spark.operators.build import SHARD_SCHEMA, metrics_dict
 
 
+_DRIVER_MERGE_MAX_SHARDS = 64  # merge_shards_to_blob's driver/tree cutover
+
+
+def _merge_sketches(sketches: list, dedup: bool):
+    """Merge into the first sketch: cuckoo kinds in one vectorized k-way
+    ``merge_many``, every other kind by folding ``merge``."""
+    if sketches[0].KIND in ("cuckoo", "semisort"):
+        return type(sketches[0]).merge_many(sketches, dedup=dedup)
+    return functools.reduce(lambda acc, nxt: acc.merge(nxt), sketches)
+
+
 def _lineage_list(v) -> list:
     # lineage arrives as list OR numpy array (parquet round-trip) OR None
     if v is None:
@@ -44,13 +55,7 @@ def _merge_group(pdf: pd.DataFrame, dedup: bool,
     files: list = []
     for v in pdf["lineage"]:
         files.extend(_lineage_list(v))
-    if sketches[0].KIND in ("cuckoo", "semisort"):
-        # vectorized k-way bucket-stack merge (core merge_many)
-        acc = type(sketches[0]).merge_many(sketches, dedup=dedup)
-    else:
-        acc = sketches[0]
-        for nxt in sketches[1:]:
-            acc.merge(nxt)
+    acc = _merge_sketches(sketches, dedup)
     # intermediate rounds stay in the fast wire format; only the FINAL
     # blob pays the semisort perm codec (1 bit/tag space parity)
     blob = acc.to_bytes() if final else wire_bytes(acc)
@@ -110,15 +115,15 @@ def tree_merge(
 
 def merge_shards_to_blob(
     shards: DataFrame, fanout: int = 16, dedup: bool = True,
-    num_shards: int | None = None, driver_threshold: int = 64,
+    num_shards: int | None = None,
 ) -> bytes:
     """Merge shard rows to one blob.
 
-    Small shard counts (≤ ``driver_threshold``) merge driver-side in
-    one collect — distributed tree rounds only pay off once the blob
-    fan-in would swamp a single process (10^3+ shards). The tree path
-    is the 10^5-shard story; the threshold just skips it where it is
-    pure overhead.
+    Small shard counts (≤ ``_DRIVER_MERGE_MAX_SHARDS``) merge
+    driver-side in one collect — distributed tree rounds only pay off
+    once the blob fan-in would swamp a single process (10^3+ shards).
+    The tree path is the 10^5-shard story; the cutover just skips it
+    where it is pure overhead.
 
     The shard count comes from the PARTITION count, not
     ``shards.count()`` — a count would execute the whole build job a
@@ -134,7 +139,7 @@ def merge_shards_to_blob(
     ``build_sketch_shards`` metadata) can pass ``num_shards``."""
     n = (num_shards if num_shards is not None
          else shards.rdd.getNumPartitions())
-    if n <= driver_threshold:
+    if n <= _DRIVER_MERGE_MAX_SHARDS:
         return collect_merged(shards, dedup=dedup).to_bytes()
     row = tree_merge(shards, fanout=fanout, dedup=dedup,
                      num_shards=n).collect()[0]
@@ -156,9 +161,4 @@ def collect_merged(shards: DataFrame, dedup: bool = True):
         sketches = list(
             ex.map(lambda r: sketch_from_bytes(bytes(r["sketch"])), rows)
         )
-    if sketches[0].KIND in ("cuckoo", "semisort"):
-        return type(sketches[0]).merge_many(sketches, dedup=dedup)
-    acc = sketches[0]
-    for nxt in sketches[1:]:
-        acc.merge(nxt)
-    return acc
+    return _merge_sketches(sketches, dedup)

@@ -92,7 +92,7 @@ def build_membership_blob(
     else:
         raise ValueError(f"not a membership sketch kind: {kind!r}")
     # merge_shards_to_blob, NOT collect_merged: below its
-    # driver_threshold it collects (tests, small dims); above, it tree-
+    # driver-merge cutover it collects (tests, small dims); above, it tree-
     # merges so a 10^5-shard dim build never fans every shard blob
     # into the driver — the aggregate-then-merge shape the reference's
     # own merge design exists for (SURVEY §2.1 merge row).

@@ -93,3 +93,24 @@ def test_bitflip_never_crashes_hard(idx, pos, flip):
         sketch_from_bytes(bytes(blob))
     except (_ACCEPTABLE + (zlib.error,)):
         pass
+
+
+@pytest.mark.parametrize("kind,f,bad", [
+    ("cuckoo", 12, 13), ("cuckoo", 12, 3),
+    ("semisort", 13, 12),
+])
+@pytest.mark.parametrize("form", ["final", "wire"])
+def test_out_of_set_width_byte_is_rejected(kind, f, bad, form):
+    """The header's width byte (offset 5) picks the tag hash, so a
+    blob whose width left the class's set would parse into a filter
+    that answers False for keys it holds. The parser rejects it."""
+    from cuckoofilter_spark.core.registry import SKETCH_KINDS
+
+    sk = SKETCH_KINDS[kind](4000, f, seed=3)
+    keys = np.arange(1, 5, dtype=np.uint64)
+    sk.add_many(keys)
+    blob = bytearray(sk.to_bytes() if form == "final" else wire_bytes(sk))
+    assert blob[5] == f
+    blob[5] = bad
+    with pytest.raises(ValueError):
+        sketch_from_bytes(bytes(blob))

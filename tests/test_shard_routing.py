@@ -1,7 +1,8 @@
 """``shuffle_distinct`` routing: the numpy Murmur3 port equals Spark's
 ``hash``, every key lands in exactly the shard ``shard_id_expr`` names,
 and shard blobs do not depend on how the input is partitioned. Also
-the ``might_contain_udf`` 64-bit key regression."""
+the ``might_contain_udf`` 64-bit key regression, NULL strings, and the
+shard rows' ``metrics.keys`` count for every sketch kind."""
 
 from __future__ import annotations
 
@@ -192,10 +193,8 @@ def test_probe_long_key_with_null_in_batch(spark):
 def test_null_strings_are_not_keys(spark, schema, strategy):
     """NULL string rows and NULL array elements never reach the
     kernel: the shards hold exactly the distinct non-null strings.
-    ``shuffle_count`` needs a counting sketch (Misra-Gries, whose
-    shard metrics carry no key count), so there the shards' tracked
-    keys and stream mass are read from the blobs."""
-    from cuckoofilter_spark.core.registry import sketch_from_bytes
+    ``shuffle_count`` needs a counting sketch (Misra-Gries), whose
+    ``metrics.keys`` is the stream mass: one per non-null value."""
     from cuckoofilter_spark.operators.build import build_sketch_shards
 
     words = [None if i % 5 == 0 else f"w{i % 23}" for i in range(120)]
@@ -218,10 +217,45 @@ def test_null_strings_are_not_keys(spark, schema, strategy):
     shards = build_sketch_shards(
         df, "k", kind=kind, lineage=False, strategy=strategy,
         shuffle_partitions=4, seed=7, **params,
-    ).select("sketch", "metrics.keys").collect()
-    if kind == "cuckoo":
-        assert sum(r["keys"] for r in shards) == len(set(non_null))
-    else:
-        sks = [sketch_from_bytes(r["sketch"]) for r in shards]
-        assert sum(len(sk.keys) for sk in sks) == len(set(non_null))
-        assert sum(sk.total for sk in sks) == len(non_null)
+    ).select("metrics.keys").collect()
+    want = len(non_null) if kind == "mg" else len(set(non_null))
+    assert sum(r["keys"] for r in shards) == want
+
+
+# kind -> constructor params; hll and kmv keep no count (keys stays 0)
+_METRIC_KINDS = {
+    "cuckoo": {"max_num_keys": 1024}, "semisort": {"max_num_keys": 1024},
+    "bloom": {"log_num_buckets": 6}, "hll": {"p": 8}, "kmv": {"k": 64},
+    "cms": {"eps": 0.01, "delta": 0.05}, "mg": {"k": 64},
+    "tdigest": {"delta": 100.0}, "kll": {"k": 64},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_METRIC_KINDS))
+def test_metrics_keys_counts_what_the_sketch_keeps(kind):
+    """``metrics.keys`` after 100 distinct inserts: the stored tags,
+    items, stream mass or total weight the sketch keeps."""
+    from cuckoofilter_spark.core.registry import make_sketch, wire_bytes
+    from cuckoofilter_spark.operators.build import metrics_dict
+
+    sk = make_sketch(kind, seed=7, **_METRIC_KINDS[kind])
+    keys = np.arange(1, 101, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    sk.add_many(keys.astype(np.float64) if kind in ("tdigest", "kll")
+                else keys)
+    want = 0 if kind in ("hll", "kmv") else 100
+    assert metrics_dict(sk, wire_bytes(sk))["keys"] == want
+
+
+def test_shuffle_count_metrics_keys_is_the_stream_mass(spark):
+    """A ``shuffle_count`` Misra-Gries build: each shard row's
+    ``metrics.keys`` is its stream mass, so they sum to the row count."""
+    from cuckoofilter_spark.operators.build import build_sketch_shards
+
+    df = spark.createDataFrame([(i % 13,) for i in range(300)], "k long")
+    shards = build_sketch_shards(
+        df, "k", kind="mg", lineage=False, strategy="shuffle_count",
+        shuffle_partitions=4, seed=7, k=64, distinct=False,
+        weight_by_count=True,
+    ).select("metrics.keys").collect()
+    assert len(shards) > 1
+    assert sum(r["keys"] for r in shards) == 300
