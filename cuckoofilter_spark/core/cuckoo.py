@@ -76,22 +76,12 @@ MAX_CUCKOO_KICKS = 500   # kMaxCuckooCount, src/cuckoofilter.h:23
 
 
 def _occupied_pairs(table: np.ndarray):
-    """(bucket_idx uint64, tag uint32) of every non-zero slot.
-
-    Round 8: scan whole BUCKETS first (each 4-slot row viewed as one
-    or two uint64 words), then extract slots only for the occupied
-    buckets — a 2-D ``np.nonzero`` over the raw slots was ~2/3 of the
-    whole k-way merge on low-load shard tables (shards sized for the
-    GLOBAL key count run at a few % load, so almost every bucket is
-    all-zero and the word scan skips it 8 slots at a time)."""
-    words = table.view(np.uint64)          # (nb, 1) u16 or (nb, 2) u32
-    if words.shape[1] == 1:
-        occ = np.flatnonzero(words.reshape(-1))
-    else:
-        occ = np.flatnonzero(words.any(axis=1))
-    sub = table[occ]
-    s_idx, s_slot = np.nonzero(sub)
-    return occ[s_idx].astype(np.uint64), sub[s_idx, s_slot].astype(np.uint32)
+    """(bucket_idx uint64, tag uint32) of every non-zero slot, in
+    (bucket, slot) order: one ``flatnonzero`` over the flat slot array."""
+    flat = table.reshape(-1)
+    pos = np.flatnonzero(flat != 0)   # bool scan: ~4x the uint16 nonzero
+    bucket = (pos >> 2).astype(np.uint64)   # ASSOC = 4 slots per bucket
+    return bucket, flat[pos].astype(np.uint32)
 
 
 def _table_dtype(f: int):
@@ -283,15 +273,18 @@ class CuckooFilter:
     ) -> np.ndarray:
         """Batched AddImpl (src/cuckoofilter.h:139-162).
 
-        Vectorized fast path: per round, one item per distinct bucket
-        is placed into an empty slot of its current bucket (phase 0 =
-        at i1, phase 1 = at i2) — this covers the overwhelming
-        majority of inserts. Items whose both buckets are full fall to
-        a *sequential* kick-chain (mirroring the reference's one-Add-
-        at-a-time eviction loop), so at most one chain is in flight
-        and the single-slot victim semantics hold exactly: the first
-        exhausted chain parks its in-flight tag, and subsequent items
-        are refused with NotEnoughSpace before any mutation.
+        Vectorized fast path (``_bulk_place_dual``): claim rounds place
+        one item per distinct bucket into an empty slot of its first
+        bucket, or of its alternate when the first is full — this
+        covers the overwhelming majority of inserts. Items whose both
+        buckets are full go to eviction chains: all of them at once in
+        ``_batched_kick`` while free slots stay at or above ``2 *
+        spill + 64``, else one *sequential* ``_kick_chain`` per item
+        (the reference's one-Add-at-a-time eviction loop), so at most
+        one chain is in flight and the single-slot victim semantics
+        hold exactly: the first exhausted chain parks its in-flight
+        tag, and later items are refused with NotEnoughSpace before any
+        mutation.
 
         ``must_place=True`` (merge path): tags are already logically
         resident, a refusal would silently drop them → raise instead.
@@ -300,14 +293,6 @@ class CuckooFilter:
         out = np.full(n, int(Status.Ok), dtype=np.int8)
         inserted = 0
 
-        # Fused dual-bucket claim loop (round-6, replacing the two
-        # sequential i1-then-i2 phases): per round, one item per
-        # distinct bucket claims a free slot (claim-stamp scatter,
-        # O(q) per round, no sort); a winner whose bucket is full
-        # flips to its ALT bucket inside the same queue instead of
-        # waiting for a whole second phase, so both candidate buckets
-        # are handled by one shrinking vectorized loop and only
-        # both-buckets-full items reach the kick machinery.
         placed, cur_idx, cur_tag, owner = self._bulk_place_dual(idx, tags)
         inserted += placed
 
@@ -619,13 +604,7 @@ class CuckooFilter:
 
     def contains_many(self, keys: np.ndarray) -> np.ndarray:
         """Vectorized Contain (src/cuckoofilter.h:166-185): victim check
-        then a two-bucket probe. Never a false negative.
-
-        For ≤16-bit tags the whole 4-slot bucket is one uint64 word and
-        the probe is the reference's SWAR ``hasvalue16``
-        (src/bitsutil.h:8-19, src/singletable.h:124-149) vectorized
-        over the batch — one gather + ~6 word ops per bucket instead
-        of a (n,4) row gather + lane compare (~2x faster).
+        then a two-bucket probe (``_probe``). Never a false negative.
 
         Cache-blocked: the hash + SWAR pipeline is ~16 elementwise
         passes over 8-byte-per-key temporaries, so un-chunked batches
@@ -634,35 +613,44 @@ class CuckooFilter:
         1M-key conext-figure5 sweep (18.9 -> 29.6 M lookups/s)."""
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         n = len(keys)
-        if n == 0:
-            return np.zeros(0, dtype=bool)
         out = np.empty(n, dtype=bool)
-        swar = self.table.dtype == np.uint16
-        t64 = self.table.reshape(-1).view(np.uint64) if swar else None
-        v_used = self.victim.used
-        v_idx = np.uint64(self.victim.index) if v_used else None
-        v_tag = np.uint32(self.victim.tag) if v_used else None
         for s in range(0, n, self._PROBE_CHUNK):
             e = min(n, s + self._PROBE_CHUNK)
-            i1, tag = self._index_tag(keys[s:e])
-            i2 = alt_index(i1, tag, self.num_buckets)
-            if swar:
-                pat = tag.astype(np.uint64) * self._SWAR_LOW
-                v1 = t64[i1.astype(np.int64)] ^ pat
-                v2 = t64[i2.astype(np.int64)] ^ pat
-                hit = (
-                    ((v1 - self._SWAR_LOW) & ~v1 & self._SWAR_HIGH) != 0
-                ) | (
-                    ((v2 - self._SWAR_LOW) & ~v2 & self._SWAR_HIGH) != 0
-                )
-            else:
-                t = tag.astype(self.table.dtype)[:, None]
-                hit = (self.table[i1.astype(np.int64)] == t).any(axis=1)
-                hit |= (self.table[i2.astype(np.int64)] == t).any(axis=1)
-            if v_used:
-                hit |= (tag == v_tag) & ((i1 == v_idx) | (i2 == v_idx))
-            out[s:e] = hit
+            out[s:e] = self._probe(*self._index_tag(keys[s:e]))
         return out
+
+    def _probe(self, i1: np.ndarray, tag: np.ndarray) -> np.ndarray:
+        """Whether ``tag`` sits in bucket ``i1``, in its alternate
+        bucket, or in the victim slot — the one two-bucket probe of
+        lookup and of merge dedup. Call it on ``_PROBE_CHUNK``-sized
+        batches.
+
+        For ≤16-bit tags the whole 4-slot bucket is one uint64 word and
+        the probe is the reference's SWAR ``hasvalue16``
+        (src/bitsutil.h:8-19, src/singletable.h:124-149) vectorized
+        over the batch — one gather + ~6 word ops per bucket instead
+        of a (n,4) row gather + lane compare (~2x faster)."""
+        i2 = alt_index(i1, tag, self.num_buckets)
+        table = self.table
+        if table.dtype == np.uint16:
+            t64 = table.reshape(-1).view(np.uint64)
+            pat = tag.astype(np.uint64) * self._SWAR_LOW
+            v1 = t64[i1.astype(np.int64)] ^ pat
+            v2 = t64[i2.astype(np.int64)] ^ pat
+            hit = (
+                ((v1 - self._SWAR_LOW) & ~v1 & self._SWAR_HIGH) != 0
+            ) | (
+                ((v2 - self._SWAR_LOW) & ~v2 & self._SWAR_HIGH) != 0
+            )
+        else:
+            t = tag.astype(table.dtype)[:, None]
+            hit = (table[i1.astype(np.int64)] == t).any(axis=1)
+            hit |= (table[i2.astype(np.int64)] == t).any(axis=1)
+        v = self.victim
+        if v.used:
+            v_idx = np.uint64(v.index)
+            hit |= (tag == np.uint32(v.tag)) & ((i1 == v_idx) | (i2 == v_idx))
+        return hit
 
     # --------------------------------------------------------------- delete
     def delete_many(self, keys: np.ndarray) -> np.ndarray:
@@ -744,7 +732,7 @@ class CuckooFilter:
         group kernel, and the body of ``merge``.
 
         Every non-zero (bucket, tag) of ``filters[1:]`` is gathered by
-        a bucket-word scan and re-inserted in ONE batch through the
+        one flat slot scan and re-inserted in ONE batch through the
         placement and kick machinery, each tag starting at its current
         bucket — valid because the alt index is recoverable from
         (bucket, tag) alone. The inputs' parked victims follow in one
@@ -753,9 +741,11 @@ class CuckooFilter:
         table.
 
         ``dedup=True`` (set mode, see ``merge``) dedups each batch
-        within itself and against the table at that point. It collapses
-        equal tags of the same bucket pair; a fingerprint two keys put
-        in two different pairs keeps both copies.
+        within itself and against the table at that point
+        (``_dedup_pairs``). It collapses equal tags of the same bucket
+        pair, and each survivor starts in a bucket one of its copies
+        sat in; a fingerprint two keys put in two different pairs keeps
+        both copies.
 
         Raises ValueError on a geometry, seed or hash-family mismatch,
         RuntimeError when ``filters[0]`` holds a victim. Overflow parks
@@ -788,36 +778,52 @@ class CuckooFilter:
         return base
 
     def _dedup_pairs(self, idx: np.ndarray, tags: np.ndarray):
-        """Canonicalize (bucket, tag) pairs, drop duplicates within the
-        batch and pairs already present in ``self``'s two legal buckets."""
-        alt = alt_index(idx, tags, self.num_buckets)
-        canon = np.minimum(idx, alt)
-        packed = (canon << np.uint64(32)) | tags.astype(np.uint64)
-        # round 8: unique over the packed VALUES (plain sort) instead
-        # of return_index (argsort + three gathers) — idx/tags are
-        # reconstructable from the packed form, and starting the
-        # re-insert at the CANONICAL bucket is equally legal (it is
-        # one of the tag's two buckets by construction). Observable
-        # membership semantics unchanged; only which of the two legal
-        # buckets a survivor starts in.
-        packed = np.unique(packed)
-        canon = packed >> np.uint64(32)
-        tags = (packed & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-        idx = canon
-        other_b = alt_index(canon, tags, self.num_buckets).astype(np.int64)
-        t = tags.astype(self.table.dtype)[:, None]
-        present = (self.table[canon.astype(np.int64)] == t).any(axis=1)
-        present |= (self.table[other_b] == t).any(axis=1)
-        v = self.victim
-        if v.used:
-            v_alt = alt_index(np.array([v.index], dtype=np.uint64),
-                              np.array([v.tag], dtype=np.uint32),
-                              self.num_buckets)[0]
-            present |= (canon == min(np.uint64(v.index), v_alt)) & (
-                tags == np.uint32(v.tag)
+        """Set-mode dedup of a batch of (bucket, tag) pairs: one copy per
+        (bucket pair, tag), and none where ``_probe`` finds the tag in
+        the pair's buckets of ``self`` (or in its victim slot).
+
+        A survivor restarts in the bucket its copy sat in, or in the
+        lower bucket of the pair when copies sit in both, so a merge of
+        key-disjoint shards puts every tag back where its shard placed
+        it. Restarting every survivor in the lower bucket instead piles
+        the merge into the lower half of each pair: on the 4-shard
+        perfbench ``build`` merge (2^19 buckets, f=12) that left 70,318
+        full buckets and 816 kicks, and a final blob of 16.2 bits/key,
+        against 0, 0 and 11.7 here.
+
+        One uint64 sort key per pair packs the lower bucket, the tag
+        and an upper-bucket bit, so survivors come out in (lower
+        bucket, tag) order and the first entry of a run is the copy to
+        keep."""
+        nb, f = self.num_buckets, self.f
+        if (nb - 1).bit_length() + f + 1 > 64:
+            raise ValueError(
+                f"{nb} buckets x {f}-bit tags do not pack into one uint64 "
+                "dedup key (log2(num_buckets) + f + 1 > 64)"
             )
-        keep = ~present
-        return idx[keep], tags[keep]
+        key = alt_index(idx, tags, nb)
+        upper = idx > key                   # this copy sits in the upper bucket
+        np.minimum(key, idx, out=key)
+        key <<= np.uint64(f + 1)
+        key |= tags.astype(np.uint64) << np.uint64(1)
+        key |= upper
+        del upper
+        key.sort()
+        first = np.ones(len(key), dtype=bool)
+        # equal (pair, tag) differ at most in the upper bit
+        np.greater(key[1:] ^ key[:-1], 1, out=first[1:])
+        key = key[first]
+        del first
+        upper = (key & np.uint64(1)).astype(bool)
+        key >>= np.uint64(1)
+        tags = (key & np.uint64((1 << f) - 1)).astype(np.uint32)
+        key >>= np.uint64(f)                # the lower bucket
+        keep = np.empty(len(key), dtype=bool)
+        for s in range(0, len(key), self._PROBE_CHUNK):
+            e = s + self._PROBE_CHUNK
+            np.logical_not(self._probe(key[s:e], tags[s:e]), out=keep[s:e])
+        np.copyto(key, alt_index(key, tags, nb), where=upper)
+        return key[keep], tags[keep]
 
     def _merge_insert(self, idx: np.ndarray, tags: np.ndarray,
                       dedup: bool) -> None:

@@ -300,6 +300,8 @@ def _route_packed(n_parts: int, dtype: np.dtype):
         keys = keys.astype(dtype, copy=False)
         h = spark_hash(keys)
         shard = np.mod(spark_hash(h), n_parts)
+        # small unsigned ids: numpy's stable sort is then a radix sort
+        shard = shard.astype(np.min_scalar_type(n_parts - 1))
         order = np.argsort(shard, kind="stable")
         counts = np.bincount(shard)
         counts = counts[counts > 0]

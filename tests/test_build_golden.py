@@ -12,7 +12,7 @@ build path produces at fixed seeds, for
 Input partitions and ``shuffle_partitions`` are pinned, so the digests
 do not depend on the core count. A refactor of the build path must
 reproduce these bytes. To re-record after an intended format change:
-``python -m tests.test_build_golden``.
+``python -m tests.test_build_golden``; it prints each entry that moved.
 """
 
 from __future__ import annotations
@@ -205,6 +205,7 @@ def test_golden_covers_every_case(golden):
 
 if __name__ == "__main__":
     from cuckoofilter_spark.session import get_spark
+    from tests.golden_io import rewrite_golden
 
     s = get_spark(app="build-golden", cores=8)
     s.sparkContext.setLogLevel("ERROR")
@@ -212,7 +213,5 @@ if __name__ == "__main__":
         "shards": {_case_id(c): shard_digests(s, *c) for c in CASES},
         "driver": driver_digests(s),
     }
-    with open(GOLDEN, "w") as fh:
-        json.dump(rec, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    rewrite_golden(GOLDEN, rec, depth=3)
     s.stop()

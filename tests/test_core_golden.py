@@ -22,7 +22,7 @@ Each entry holds the sha256 of ``to_bytes()`` and ``wire_bytes()``,
 the sha256 of the returned status array, ``num_items``, ``kicks`` and
 the victim — or the exception type when the operation raised (a
 merge may overflow). To re-record after an intended change:
-``python -m tests.test_core_golden``.
+``python -m tests.test_core_golden``; it prints each entry that moved.
 """
 
 from __future__ import annotations
@@ -206,7 +206,7 @@ def test_core_state_matches_golden(golden, name):
 
 
 if __name__ == "__main__":
-    rec = {name: fn(*args) for name, (fn, args) in CASES.items()}
-    with open(GOLDEN, "w") as fh:
-        json.dump(rec, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    from tests.golden_io import rewrite_golden
+
+    rewrite_golden(GOLDEN, {name: fn(*args) for name, (fn, args)
+                            in CASES.items()}, depth=1)

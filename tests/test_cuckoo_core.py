@@ -15,6 +15,7 @@ from cuckoofilter_spark.core.cuckoo import (
     MAX_CUCKOO_KICKS,
     CuckooFilter,
     Status,
+    _occupied_pairs,
 )
 from cuckoofilter_spark.core.hashing import (
     MultiplyShift,
@@ -351,3 +352,119 @@ def test_hash_family_pluggable_tabulation():
         ms.merge(t)
     with pytest.raises(ValueError, match="hash_family"):
         CuckooFilter(1000, 12, seed=1, hash_family="nope")
+
+
+# ------------------------------------------------ set-mode merge placement
+def _routed_shards():
+    """Four f=12 shard filters of 2^14 dense ids, split by owner shard
+    the way ``shuffle_distinct`` routes them (``spark_hash`` of the
+    key's hash, mod the shard count), each inserted sorted."""
+    from cuckoofilter_spark.core.cuckoo import suggest_capacity
+    from cuckoofilter_spark.core.hashing import spark_hash
+
+    ids = np.arange(1 << 14, dtype=np.int64)
+    owner = np.mod(spark_hash(spark_hash(ids)), 4)
+    shards = []
+    for s in range(4):
+        fl = CuckooFilter(suggest_capacity(len(ids)), 12, seed=7)
+        assert (fl.add_many(ids[owner == s].astype(np.uint64)) == 0).all()
+        shards.append(fl)
+    return ids, shards
+
+
+def test_dedup_merge_keeps_each_tag_in_its_shard_bucket():
+    ids, shards = _routed_shards()
+    placed = [_occupied_pairs(fl.table) for fl in shards]
+    b = np.concatenate([p[0] for p in placed])
+    t = np.concatenate([p[1] for p in placed])
+    lo = np.minimum(b, alt_index(b, t, shards[0].num_buckets))
+    _, inv, copies = np.unique((lo << np.uint64(32)) | t,
+                               return_inverse=True, return_counts=True)
+    # ids whose fingerprints collide across shards keep one copy
+    single = copies[inv] == 1
+    assert single.sum() > len(ids) - 16
+    kicks0 = shards[0].kicks
+    merged = CuckooFilter.merge_many(shards, dedup=True)
+    assert merged.kicks == kicks0
+    assert ((merged.table != 0).sum(axis=1) < ASSOC).all()
+    assert merged.num_items == len(copies)
+    for bj, tj in zip(b[single].tolist(), t[single].tolist()):
+        assert tj in merged.table[bj]
+    assert merged.contains_many(ids.astype(np.uint64)).all()
+
+
+def _dedup_reference(fl, idx, tags):
+    """(pair, tag) -> the buckets its copies sat in, for every input
+    pair that ``fl`` does not already hold: a plain set-based
+    re-statement of set-mode merge dedup."""
+    nb = fl.num_buckets
+    v = fl.victim
+    out = {}
+    for b, t in zip(idx.tolist(), tags.tolist()):
+        a = int(alt_index(np.array([b], np.uint64), np.array([t], np.uint32),
+                          nb)[0])
+        lo, hi = min(a, b), max(a, b)
+        held = t in fl.table[lo].tolist() or t in fl.table[hi].tolist() or (
+            v.used and v.tag == t and v.index in (lo, hi))
+        if not held:
+            out.setdefault((lo, t), set()).add(b)
+    return out
+
+
+def _dedup_inputs(kind, f, victim):
+    from cuckoofilter_spark.core.semisort import SemiSortCuckooFilter
+
+    cls = SemiSortCuckooFilter if kind == "semisort" else CuckooFilter
+    keys = _keys(10_000, seed=f)
+    base = cls(2_000, f, seed=3)        # 1,024 buckets = 4,096 slots
+    base.add_many(keys[:4_500] if victim else keys[:1_500])
+    assert base.victim.used == victim
+    others = []
+    for i in range(3):
+        fl = cls(2_000, f, seed=3)
+        # own keys, keys shared between inputs, and keys the base holds
+        fl.add_many(np.concatenate([keys[5_000 + 800 * i:5_600 + 800 * i],
+                                    keys[9_800:], keys[1_000:1_200]]))
+        others.append(fl)
+    pairs = [_occupied_pairs(fl.table) for fl in others]
+    idx = np.concatenate([p[0] for p in pairs])
+    tags = np.concatenate([p[1] for p in pairs])
+    if victim:
+        v = base.victim
+        vi = np.array([v.index], np.uint64)
+        vt = np.array([v.tag], np.uint32)
+        idx = np.concatenate([idx, vi, alt_index(vi, vt, base.num_buckets)])
+        tags = np.concatenate([tags, vt, vt])
+    return base, idx, tags
+
+
+@pytest.mark.parametrize("kind,f", [("cuckoo", 8), ("cuckoo", 12),
+                                    ("cuckoo", 16), ("cuckoo", 32),
+                                    ("semisort", 13)])
+@pytest.mark.parametrize("victim", [False, True])
+def test_dedup_pairs_matches_set_reference(kind, f, victim):
+    base, idx, tags = _dedup_inputs(kind, f, victim)
+    ref = _dedup_reference(base, idx, tags)
+    start, kept = base._dedup_pairs(idx, tags)
+    alt = alt_index(start, kept, base.num_buckets)
+    got = list(zip(np.minimum(start, alt).tolist(), kept.tolist()))
+    assert len(got) == len(set(got))
+    assert set(got) == set(ref)
+    assert len(got) < len(idx)          # the shared keys collapsed
+    for (lo, t), b in zip(got, start.tolist()):
+        copies = ref[(lo, t)]
+        assert b in copies
+        if len(copies) > 1:             # copies in both buckets
+            assert b == lo
+
+
+def test_dedup_key_packing_guard():
+    stub = CuckooFilter.__new__(CuckooFilter)
+    stub.f = 32
+    stub.num_buckets = 1 << 31          # 31 + 32 + 1 bits: fits
+    start, kept = stub._dedup_pairs(np.zeros(0, np.uint64),
+                                    np.zeros(0, np.uint32))
+    assert len(start) == len(kept) == 0
+    stub.num_buckets = 1 << 32          # one bit past 64
+    with pytest.raises(ValueError, match="uint64"):
+        stub._dedup_pairs(np.zeros(1, np.uint64), np.ones(1, np.uint32))
